@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main (driver contract): runs every SparkEntry query on
   * SPARK_GRAFT_SF_DIR and prints ONE JSON line
   * {"metric":"total","value":N,"unit":"sec","queries":{...},"sf":...}.
@@ -83,64 +81,20 @@ object Bench {
     }.toSeq.sortBy(_._1)
   }
 
-  /** Short git HEAD of the working tree the measurement ran from — every
-    * published perf band must carry the commit it was measured AT (the
-    * round-13 "15.5 s" retraction and the round-15 evolving-dedup band
-    * were both claims whose measuring commit could no longer be
-    * identified). Best-effort: "unknown" outside a git checkout. */
-  private[graft] def gitHead(): String =
-    try {
-      val p = new ProcessBuilder("git", "rev-parse", "--short", "HEAD")
-        .redirectErrorStream(true).start()
-      val out = new String(p.getInputStream.readAllBytes(), "UTF-8").trim
-      if (p.waitFor() == 0 && out.nonEmpty) out else "unknown"
-    } catch { case _: Exception => "unknown" }
-
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // Move the JVM temp root to tmpfs when present (ShuffleDir's rationale,
-    // applied to everything else that lands in java.io.tmpdir during a
-    // bench run: staged streaming landing zones, TEMPORARY stream
-    // checkpoints — fresh UUID dir per start, so restart semantics are
-    // untouched — offset/commit logs, state-store files, and per-batch
-    // sink scratch). All of it is sf0.1-sized (tens of MB); the explicit
-    // durable checkpoints some queries pass by option() are absolute paths
-    // and unaffected. Production guidance is the opposite for CHECKPOINTS
-    // (durable cluster storage — that is their point); this is a
-    // single-host measurement harness with no durability to lose.
-    sys.env.get("SPARK_GRAFT_TMPDIR")
-      .orElse {
-        val shm = new java.io.File("/dev/shm")
-        if (shm.isDirectory && shm.canWrite) {
-          val d = new java.io.File(shm, "graft_bench_tmp")
-          d.mkdirs()
-          Some(d.getAbsolutePath)
-        } else None
-      }
-      .foreach(t => System.setProperty("java.io.tmpdir", t))
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.local.dir", ShuffleDir.path)
-      // Default 1 = one file per mapper (measured suite-faster, commit
-      // e9beb82); env-overridable so per-query effects of the writer
-      // choice can be measured as a controlled pair (SCALING.md table).
-      .config("spark.shuffle.sort.bypassMergeThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_BYPASS_MERGE", "1"))
-      .config("spark.sql.warehouse.dir", "/tmp/graft_warehouse")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new graft.functions.GraftExtensions)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // The JVM temp root goes to tmpfs (streaming landing zones, stream
+    // checkpoints, state-store files); the explicit durable checkpoints some
+    // queries pass by option() are absolute paths and unaffected. A
+    // single-host measurement harness has no durability to lose.
+    Harness.useTmpfsTmpdir()
+    val spark = Harness.session()
 
     // Warmup: exercise codegen, parquet reader, shuffle machinery once.
     val wn = spark.read.parquet(s"$sfDir/nation.parquet")
     val wr = spark.read.parquet(s"$sfDir/region.parquet")
-    wn.join(wr, wn("n_regionkey") === wr("r_regionkey"))
-      .groupBy("r_name").count()
-      .write.format("noop").mode("overwrite").save()
+    Harness.noop(wn.join(wr, wn("n_regionkey") === wr("r_regionkey"))
+      .groupBy("r_name").count())
 
     val errors = scala.collection.mutable.ListBuffer.empty[String]
     // Optional comma-separated subset for isolated timing experiments
@@ -189,18 +143,10 @@ object Bench {
       }
     val priorCpuMs: Map[String, Long] = priorRows.map { case (k, v) => k -> v._2 }
     val priorWallS: Map[String, Double] = priorRows.map { case (k, v) => k -> v._1 }
-    val gcBeans = java.lang.management.ManagementFactory.getGarbageCollectorMXBeans
-    def gcNowMs(): Long = {
-      var t = 0L
-      gcBeans.forEach(b => t += b.getCollectionTime)
-      t
-    }
-    // Process CPU time (ns) — the co-tenant-starvation detector: a query's
-    // CPU spend is load-invariant (same work either way), so a row whose
-    // wall time is inflated but whose cpuMs matches a clean run was starved
-    // of cores by ambient load, not slowed by a plan regression.
-    val procBean = java.lang.management.ManagementFactory.getOperatingSystemMXBean
-      .asInstanceOf[com.sun.management.OperatingSystemMXBean]
+    // Each run's process CPU is the co-tenant-starvation detector: a
+    // query's CPU spend is load-invariant (same work either way), so a row
+    // whose wall time is inflated but whose cpuMs matches a clean run was
+    // starved of cores by ambient load, not slowed by a plan regression.
     // Load immunity: this host carries ambient co-tenant load that has twice
     // produced false regression scares (rounds 2 and 5 — r5's driver bench
     // read 418 s where a clean re-run of the same queries measured ~7x less).
@@ -219,53 +165,34 @@ object Bench {
     def warmed(name: String) =
       !name.startsWith("q_stream") || name == "q_stream_static_join"
     val results0 = selected.map { case (name, fn) =>
-      if (warmupOk && warmed(name)) {
-        try fn(spark, warmupDir).write.format("noop").mode("overwrite").save()
-        catch { case _: Throwable => () } // timed run reports real failures
-        TrackedCaches.release()
-        spark.catalog.clearCache()
-      }
+      // The timed runs report real failures; a warmup failure is ignored.
+      if (warmupOk && warmed(name)) Harness.run(spark, fn(spark, warmupDir))
       // A swallowed failure would contribute a near-zero time and make the
       // JSON look healthy — record it loudly instead, and keep the failed
       // run's (near-zero) wall time out of the min: a query that succeeds
       // on run 1 and fails fast on run 2 must report run 1's measurement.
       // Every run also stamps the host's 1-min systemLoadAverage at run
-      // end (the 5th element), so the artifact's runsPerQuery carries
-      // [wall, load] pairs a round-over-round reader can adjudicate
-      // contention from WITHOUT a judge re-bench session — round 14's
-      // headline (293.7 s at load 18.2) took exactly that session.
-      def timedRun(): (Double, Long, Long, Boolean, Double) = {
-        val g0 = gcNowMs()
-        val c0 = procBean.getProcessCpuTime
-        val t0 = System.nanoTime()
-        var ok = true
-        try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-        catch {
-          case e: Throwable =>
-            ok = false
-            if (!errors.contains(name)) errors += name
-            System.err.println(s"[bench] $name FAILED: ${e.getClass.getName}: ${e.getMessage}")
+      // end, so the artifact's runsPerQuery carries [wall, load] pairs a
+      // round-over-round reader can adjudicate contention from WITHOUT a
+      // judge re-bench session — round 14's headline (293.7 s at load
+      // 18.2) took exactly that session.
+      def timedRun(): Harness.Run = {
+        val r = Harness.run(spark, fn(spark, sfDir))
+        r.error.foreach { e =>
+          if (!errors.contains(name)) errors += name
+          System.err.println(s"[bench] $name FAILED: ${e.getClass.getName}: ${e.getMessage}")
         }
-        val dt = (System.nanoTime() - t0) / 1e9
-        // Queries cache() intermediates for intra-query reuse; drop them so
-        // 118 queries' worth of stale blocks don't squeeze execution memory
-        // and throttle late queries (and so the second timed run measures
-        // real work). TrackedCaches also frees RDD-level persists
-        // (scalableRowNumber/cumSum) that catalog.clearCache cannot see.
-        TrackedCaches.release()
-        spark.catalog.clearCache()
-        (dt, gcNowMs() - g0, (procBean.getProcessCpuTime - c0) / 1000000, ok,
-          procBean.getSystemLoadAverage)
+        r
       }
       var runs = List(timedRun(), timedRun())
       // Only successful runs compete for the kept min (see timedRun); if
       // every run failed the min of the failures stands as a sentinel and
       // the errors list marks the row as meaningless.
-      def good = { val g = runs.filter(_._4); if (g.nonEmpty) g else runs }
+      def good = { val g = runs.filter(_.ok); if (g.nonEmpty) g else runs }
       // The two good runs disagreeing by >2x (plus a floor so sub-second
       // queries don't trigger it) means a load spike hit one of them; one
       // more run sharpens the min.
-      val ts = good.map(_._1)
+      val ts = good.map(_.wall)
       if (ts.max > 2 * ts.min && ts.max - ts.min > 1.0) runs :+= timedRun()
       // Correlated noise — BOTH runs stretched equally — defeats the
       // disagreement trigger, but leaves a fingerprint the runs carry
@@ -278,23 +205,23 @@ object Bench {
       // are exempt: micro-batch trigger waits make wall >> cpu their
       // healthy steady state.
       if (!name.startsWith("q_stream")) {
-        var kept0 = good.minBy(_._1)
+        var kept0 = good.minBy(_.wall)
         // Retry triggers 2 + 3: wall-vs-cpu starvation (cores idle while
         // the clock ran) OR cpu-vs-prior-round drift (identical work
         // suddenly costs > 2x the last artifact's process CPU — the
         // correlated-contention fingerprint that inflates cpu AND wall,
         // which the starvation test alone cannot see).
-        def drifted(k: (Double, Long, Long, Boolean, Double)) =
-          priorCpuMs.get(name).exists(pc => k._3 > 2 * pc && k._3 - pc > 2000)
+        def drifted(k: Harness.Run) =
+          priorCpuMs.get(name).exists(pc => k.cpuMs > 2 * pc && k.cpuMs - pc > 2000)
         while (runs.size < 4 &&
-            ((kept0._1 > 1.5 && kept0._1 * 1000 > 1.5 * kept0._3.toDouble) ||
+            ((kept0.wall > 1.5 && kept0.wall * 1000 > 1.5 * kept0.cpuMs.toDouble) ||
               drifted(kept0))) {
           runs :+= timedRun()
-          kept0 = good.minBy(_._1)
+          kept0 = good.minBy(_.wall)
         }
       }
-      val kept = good.minBy(_._1)
-      (name, kept._1, kept._2, kept._3, runs.map(r => (r._1, r._5)))
+      val kept = good.minBy(_.wall)
+      (name, kept.wall, kept.gcMs, kept.cpuMs, runs.map(r => (r.wall, r.load)))
     }
     def stillDrifted(k: String, c: Long) =
       priorCpuMs.get(k).exists(pc => c > 2 * pc && c - pc > 2000)
@@ -330,17 +257,10 @@ object Bench {
         val byName = selected.toMap
         results0.map {
           case row @ (name, w, _, c, rs) if firstPassDrift.contains(name) =>
-            val g0 = gcNowMs(); val c0 = procBean.getProcessCpuTime
-            val t0 = System.nanoTime()
-            val ok = try {
-              byName(name)(spark, sfDir).write.format("noop").mode("overwrite").save(); true
-            } catch { case _: Throwable => false }
-            val dt = (System.nanoTime() - t0) / 1e9
-            TrackedCaches.release(); spark.catalog.clearCache()
-            val (dg, dc) = (gcNowMs() - g0, (procBean.getProcessCpuTime - c0) / 1000000)
-            val dl = procBean.getSystemLoadAverage
-            if (ok && dt < w) (name, dt, dg, dc, rs :+ ((dt, dl)))
-            else if (ok) (name, w, row._3, c, rs :+ ((dt, dl)))
+            val r = Harness.run(spark, byName(name)(spark, sfDir))
+            val (dt, dl) = (r.wall, r.load)
+            if (r.ok && dt < w) (name, dt, r.gcMs, r.cpuMs, rs :+ ((dt, dl)))
+            else if (r.ok) (name, w, row._3, c, rs :+ ((dt, dl)))
             else {
               // A crashed deferred pass fails fast — appending its
               // near-zero wall would read as a legitimate fast extra run.
@@ -392,7 +312,7 @@ object Bench {
       .stream().mapToLong(_.getCollectionTime).sum()
     val env = s""""env":{"availableProcessors":${Runtime.getRuntime.availableProcessors},""" +
       s""""systemLoadAverage":${osBean.getSystemLoadAverage},"gcTimeMs":$gcMs,""" +
-      s""""commit":"${gitHead()}"}"""
+      s""""commit":"${Harness.gitHead()}"}"""
     // The driver captures a BOUNDED 2000-char stdout tail and json-parses
     // what it finds there. The full contract line (125 query names alone
     // are >2.2 KB) CANNOT fit — six rounds of artifacts show it truncated

@@ -12,9 +12,16 @@ import org.apache.spark.sql.functions._
   * clusters and measure a different problem).
   *
   * Usage: runMain graft.ScaleTest [copies]        (default 10)
-  *        runMain graft.ScaleTest docs [copies]   (dedup-family Nx experiment; SCALING.md carries 10x + 30x)
+  *        runMain graft.ScaleTest docs [copies] [q1,q2,...]  (dedup-family Nx experiment; SCALING.md carries 10x + 30x)
+  *        runMain graft.ScaleTest events [copies] (event-analytics family)
   *        runMain graft.ScaleTest streams         (streaming-family 10x experiment)
-  *        runMain graft.ScaleTest vecs            (vector-family 10x + clustered recall ladders)
+  *        runMain graft.ScaleTest vecs [copies]   (vector-family Nx + clustered recall ladders)
+  *        runMain graft.ScaleTest vecstanding|bm25standing|dedupstanding|evostanding [copies]
+  *                                                (standing-index build/probe/mutate legs)
+  *        runMain graft.ScaleTest soak|soakdedup|soakann [batches]  (default 20)
+  *
+  * Every mode runs on [[Harness.session]] (SPARK_GRAFT_CPUS cores) and
+  * times through [[Harness.run]]/[[Harness.measure]].
   *
   * The `streams` mode replicates events (and customers, for the stream-static
   * join) 10x with consistent key offsets — 10x the events in the SAME time
@@ -37,6 +44,8 @@ import org.apache.spark.sql.functions._
   * size distribution — growth, not artificial duplication.
   */
 object ScaleTest {
+
+  private val Src = "/root/testdata/sf0.1"
 
   /** Fingerprint of the source corpus, baked into every staged-corpus path
     * alongside the generator parameters: when the driver regenerates
@@ -62,8 +71,8 @@ object ScaleTest {
     * prefix but a STALE stamp are corpora of a regenerated-away source:
     * delete them here — each regeneration otherwise strands multi-GB
     * orphans in tmpdir forever. */
-  private def stagedDir(prefix: String, src: String): String = {
-    val stamp = corpusStamp(src)
+  private def stagedDir(prefix: String): String = {
+    val stamp = corpusStamp(Src)
     val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
     val all = Option(tmp.listFiles()).getOrElse(Array.empty[java.io.File])
     all.filter(f => f.isDirectory && f.getName.startsWith(prefix) &&
@@ -84,64 +93,99 @@ object ScaleTest {
     f.delete(): Unit
   }
 
+  /** The staged corpus for `prefix` under the current source stamp, built
+    * by `build(dst)` on first use; the `_built` marker is written last, so
+    * an interrupted build is redone. */
+  private def staged(prefix: String)(build: String => Unit): String = {
+    val dst = stagedDir(prefix)
+    if (!new java.io.File(s"$dst/_built").exists()) {
+      build(dst)
+      new java.io.File(s"$dst/_built").createNewFile()
+    }
+    dst
+  }
+  // Parameter-stamped paths (copies, substitution mod, id/key stride): a
+  // change to a corpus generator must bump its suffix so a stale corpus
+  // can't skew the reported ratios.
+  private def docsCorpus(spark: SparkSession, copies: Int): String =
+    staged(s"graft_docs${copies}x_c${copies}_m5_d1000000_")(buildDocs(spark, Src, _, copies))
+  private def vecsCorpus(spark: SparkSession, copies: Int): String =
+    staged(s"graft_vecs${copies}x_c${copies}_v1000000_")(buildVecs(spark, Src, _, copies))
+  private def eventsCorpus(spark: SparkSession, copies: Int): String =
+    staged(s"graft_events${copies}x_c${copies}_s1000000_")(buildStreams(spark, Src, _, copies))
+
   def main(args: Array[String]): Unit = {
     // Every ladder/soak report leads with the commit it measured — a
     // published SCALING.md band without its measuring commit is the
     // claim-vs-HEAD gap class behind the r13 and r15 adjudications.
-    println(s"[scale] measured-at commit=${Bench.gitHead()} " +
+    println(s"[scale] measured-at commit=${Harness.gitHead()} " +
       f"load=${java.lang.management.ManagementFactory
         .getOperatingSystemMXBean.getSystemLoadAverage}%.1f")
-    if (args.headOption.contains("docs"))
+    val (mode, rest) = args.headOption match {
+      case Some(m) if !m.forall(_.isDigit) => (m, args.drop(1))
+      case _ => ("sf", args)
+    }
+    def n(default: Int): Int = rest.headOption.map(_.toInt).getOrElse(default)
+    val spark = Harness.session()
+    try mode match {
+      case "sf" => sfMain(spark, n(10))
       // Optional third arg: comma-separated query names — a targeted
       // subset for deep-scale probes (e.g. `docs 100 q_ngram_novelty,...`
-      // runs only the named rows; the evolving decontam gate is
-      // broadcast-regime-only and must be left out of >64 MB corpora).
-      return docsMain(args.drop(1).headOption.map(_.toInt).getOrElse(10),
-        args.drop(2).headOption.map(_.split(',').toSet))
-    if (args.headOption.contains("streams")) return streamsMain()
-    if (args.headOption.contains("vecs"))
-      return vecsMain(args.drop(1).headOption.map(_.toInt).getOrElse(10))
-    if (args.headOption.contains("vecstanding"))
-      return vecStandingMain(args.drop(1).headOption.map(_.toInt).getOrElse(10))
-    if (args.headOption.contains("bm25standing"))
-      return bm25StandingMain(args.drop(1).headOption.map(_.toInt).getOrElse(10))
-    if (args.headOption.contains("dedupstanding"))
-      return dedupStandingMain(args.drop(1).headOption.map(_.toInt).getOrElse(10))
-    if (args.headOption.contains("evostanding"))
-      return evoStandingMain(args.drop(1).headOption.map(_.toInt).getOrElse(10))
-    if (args.headOption.contains("events"))
-      return eventsMain(args.drop(1).headOption.map(_.toInt).getOrElse(10))
-    if (args.headOption.contains("soak"))
-      return soakMain(args.drop(1).headOption.map(_.toInt).getOrElse(20))
-    if (args.headOption.contains("soakdedup"))
-      return soakDedupMain(args.drop(1).headOption.map(_.toInt).getOrElse(20))
-    if (args.headOption.contains("soakann"))
-      return soakAnnMain(args.drop(1).headOption.map(_.toInt).getOrElse(20))
-    val copies = if (args.nonEmpty) args(0).toInt else 10
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.local.dir", ShuffleDir.path)
-      .config("spark.shuffle.sort.bypassMergeThreshold", "1")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+      // runs only the named rows).
+      case "docs" => docsMain(spark, n(10), rest.drop(1).headOption.map(_.split(',').toSet))
+      case "streams" => streamsMain(spark)
+      case "events" => eventsMain(spark, n(10))
+      case "vecs" => vecsMain(spark, n(10))
+      case "vecstanding" => vecStandingMain(spark, n(10))
+      case "bm25standing" => bm25StandingMain(spark, n(10))
+      case "dedupstanding" => dedupStandingMain(spark, n(10))
+      case "evostanding" => evoStandingMain(spark, n(10))
+      case "soak" => soakMain(spark, n(20))
+      case "soakdedup" => soakDedupMain(spark, n(20))
+      case "soakann" => soakAnnMain(spark, n(20))
+      case other => throw new IllegalArgumentException(s"unknown ScaleTest mode '$other'")
+    } finally spark.stop()
+  }
 
-    val src = "/root/testdata/sf0.1"
-    // The corpus directory embeds the generator parameters (copy count +
-    // key stride): changing either forces a rebuild instead of silently
-    // reusing a corpus built under the old scheme.
-    val dst =
-      stagedDir(s"graft_sf1_c${copies}_s1000000_", src)
-
-    if (!new java.io.File(s"$dst/_built").exists()) {
-      build(spark, src, dst, copies)
-      new java.io.File(s"$dst/_built").createNewFile()
+  /** The 1x-vs-Nx ladder every family shares: `subset` is warmed at 1x,
+    * then timed at 1x and at `dst` (one [[Harness.run]] per row — tracked
+    * caches released — and [[Harness.settle]] after each row, so a
+    * deep-scale neighbor's debris is reaped before the next row is timed;
+    * at 30x q_asof_native read 9.61 s in a polluted JVM vs 0.64 s
+    * isolated). `warmBig` adds an untimed Nx pass, for streaming rows
+    * that stage their own landing zone on first call. Prints
+    * `query,<label>1x_s,<label><copies>x_s,ratio`. A row whose operator
+    * declines the corpus's regime (the evolving decontam gate is
+    * broadcast-only and throws BroadcastRegimeExceeded past the gate —
+    * matched by type, its distributed twin runs those corpora) prints
+    * `skipped`; any other failure aborts the ladder. */
+  private def ladder(spark: SparkSession, label: String, copies: Int,
+      subset: Seq[String], dst: String, warmBig: Boolean = false): Unit = {
+    def pass(dir: String): Map[String, Double] = subset.map { name =>
+      val r = Harness.run(spark, SparkEntry.queries(name)(spark, dir))
+      Harness.settle()
+      name -> (r.error match {
+        case Some(_: graft.streaming.BroadcastRegimeExceeded) =>
+          println(s"[ladder] $name skipped: corpus exceeds the broadcast gate")
+          Double.NaN
+        case _ => r.seconds
+      })
+    }.toMap
+    pass(Src)
+    val small = pass(Src)
+    if (warmBig) pass(dst)
+    val big = pass(dst)
+    println(s"query,${label}1x_s,$label${copies}x_s,ratio")
+    subset.foreach { q =>
+      if (small(q).isNaN || big(q).isNaN) println(s"$q,skipped,skipped,-")
+      else println(f"$q,${small(q)}%.2f,${big(q)}%.2f,${big(q) / small(q)}%.1f")
     }
+  }
 
-    val subset = Seq(
+  /** Relational-family ladder on the ~sf1 replica (see the object
+    * scaladoc). */
+  private def sfMain(spark: SparkSession, copies: Int): Unit =
+    ladder(spark, "sf", copies, Seq(
       "q1_agg", "q_fact_songplays", "q_groupby_count", "q_window_running",
       "q_sessionize", "q_salted_join", "q_topk", "q_join_left",
       "q_tumbling_window", "q_asof_join", "q_pagerank", "q_bloom_join",
@@ -150,69 +194,15 @@ object ScaleTest {
       "q_table_stats", "q_equidepth_hist",
       "q_basket_pairs", "q_incr_agg", "q_dpp_join", "q_triangle_count",
       "q_reach_bfs", "q_reach_bfs_dist", "q_variant_extract", "q_sql_udf",
-      "q_collation")
-
-    // Drain builder caches between queries like every other family's
-    // ladder (and Bench) does: without it, cached projections from the
-    // earlier queries (equidepth's bucketed orders, pagerank's edge
-    // persists, triangle's co-supply projection — multi-million-row at
-    // 30x) pile up across the 28-query big pass and the later rows time
-    // GC/eviction churn instead of their plans. Measured at 30x:
-    // q_asof_native read 9.61 s in the polluted JVM vs 0.64 s isolated,
-    // q_table_stats 10.19 vs 1.16, q_window_running 19.63 vs 5.67.
-    def time(dir: String): Map[String, Double] =
-      subset.map { name =>
-        val t0 = System.nanoTime()
-        SparkEntry.queries(name)(spark, dir)
-          .write.format("noop").mode("overwrite").save()
-        val dt = (System.nanoTime() - t0) / 1e9
-        TrackedCaches.release()
-        spark.catalog.clearCache()
-        // Post-query GC hygiene outside the timed window (docsMain's 100x
-        // lesson, third family it bit): releasing the caches only queues
-        // them for the ContextCleaner, and at 100x the un-reaped debris of
-        // a 60M-row neighbor inflated q_groupby_count to 23.4 s vs 3.45
-        // hygienic (1.1 isolated-warm) and q_join_left 10.6 vs 3.15.
-        System.gc()
-        Thread.sleep(500)
-        name -> dt
-      }.toMap
-
-    time(src) // warm both code paths
-    val small = time(src)
-    val big = time(dst)
-    println("query,sf0.1_s,sf1_s,ratio")
-    subset.foreach { q =>
-      println(f"$q,${small(q)}%.2f,${big(q)}%.2f,${big(q) / small(q)}%.1f")
-    }
-    spark.stop()
-  }
+      "q_collation"),
+      staged(s"graft_sf1_c${copies}_s1000000_")(build(spark, Src, _, copies)))
 
   /** Dedup/curation-family scale experiment at `copies`x documents (10 by
-    * default; `runMain graft.ScaleTest docs 30` runs the 30x ladder —
-    * 150k docs, still far under this host's memory, and the point where a
-    * super-linear candidate generator would visibly bend). */
-  private def docsMain(copies: Int, only: Option[Set[String]] = None): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.local.dir", ShuffleDir.path)
-      .config("spark.shuffle.sort.bypassMergeThreshold", "1")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val src = "/root/testdata/sf0.1"
-    // Parameter-stamped path (copies, substitution mod, doc-id stride):
-    // a change to buildDocs must bump this suffix so a stale cached corpus
-    // can't skew the reported ratios.
-    val dst =
-      stagedDir(s"graft_docs${copies}x_c${copies}_m5_d1000000_", src)
-    if (!new java.io.File(s"$dst/_built").exists()) {
-      buildDocs(spark, src, dst, copies)
-      new java.io.File(s"$dst/_built").createNewFile()
-    }
+    * default; `docs 30` runs the 30x ladder — 150k docs, still far under
+    * this host's memory, and the point where a super-linear candidate
+    * generator would visibly bend). */
+  private def docsMain(spark: SparkSession, copies: Int,
+      only: Option[Set[String]]): Unit = {
     val subset = Seq(
       "q_dedup_exact", "q_dedup_fingerprint", "q_dedup_minhash",
       "q_dedup_simhash", "q_winnow_fps", "q_dedup_winnow",
@@ -226,280 +216,79 @@ object ScaleTest {
       "q_train_split", "q_shard_manifest", "q_source_overlap",
       "q_pmi_pairs", "q_len_hist", "q_ngram_novelty", "q_dedup_savings",
       "q_pad_waste", "q_media_motion",
-      // Streaming decontamination joins the ladder (round 10): its index
-      // cost scales with the corpus and its screen strategy is
-      // size-selected, so the Nx row measures both the build slope and
-      // which side of the broadcast crossover the corpus lands on. The
-      // evolving variant (round 11) rides alongside: same screen, but the
-      // index is driver-maintained and appended per batch — the Nx pair
-      // prices the rebuild-vs-incremental difference directly. The
-      // DISTRIBUTED evolving twin (round 13) is the one gate MEANT for
-      // the >64 MB corpora the broadcast twin requires away: its Nx row
-      // proves per-batch screen+append cost stays |batch|-bounded while
-      // the standing corpus grows — the property that is its thesis.
+      // Streaming decontamination rides the ladder: its index cost scales
+      // with the corpus and its screen strategy is size-selected, so the
+      // Nx row measures both the build slope and which side of the
+      // broadcast crossover the corpus lands on. The evolving variant
+      // prices rebuild-vs-incremental; its DISTRIBUTED twin is the one
+      // gate meant for the >64 MB corpora the broadcast twin refuses, and
+      // its Nx row proves per-batch screen+append cost stays
+      // |batch|-bounded while the standing corpus grows.
       "q_stream_decontam", "q_stream_decontam_evolving",
       "q_stream_decontam_evolving_dist")
       .filter(q => only.forall(_.contains(q)))
     require(subset.nonEmpty, "query filter matched nothing in the docs subset")
-    def time(dir: String): Map[String, Double] =
-      subset.map { name =>
-        val t0 = System.nanoTime()
-        val dt =
-          try {
-            SparkEntry.queries(name)(spark, dir)
-              .write.format("noop").mode("overwrite").save()
-            (System.nanoTime() - t0) / 1e9
-          } catch {
-            // The evolving decontam gate hard-requires the broadcast regime
-            // (streamDecontamEvolving throws past BroadcastScreenMaxBytes by
-            // design rather than silently diverge); at docs 30/100 the
-            // staged corpus exceeds the gate, and one operator declining its
-            // regime must not abort the other rows mid-ladder. Record a
-            // skipped (NaN) row and keep going. Matched by TYPE — a reword
-            // of the gate's message must not silently revert this to an
-            // abort (its distributed twin runs those corpora instead).
-            case _: graft.streaming.BroadcastRegimeExceeded =>
-              println(s"[ladder] $name skipped: corpus exceeds the broadcast gate")
-              Double.NaN
-          }
-        TrackedCaches.release()
-        spark.catalog.clearCache()
-        // Post-query hygiene OUTSIDE the timed window: a deep-scale
-        // neighbor's spill/broadcast debris (shuffle files on tmpfs,
-        // unreaped broadcast blocks, an expanded fragmented heap) is
-        // reaped by the ContextCleaner only after the owning refs are
-        // GC'd, and at 100x that residue inflated the NEXT query 3-6x
-        // (q_dedup_incremental: 82 s after q_containment's spills vs
-        // 12.6-27 s isolated in a fresh JVM). An explicit GC lets the
-        // cleaner run now, so each row times its own plan — the
-        // per-executor-fresh-state a real cluster's dynamic allocation
-        // gives between stages.
-        System.gc()
-        Thread.sleep(500)
-        name -> dt
-      }.toMap
-    time(src) // warm code paths
-    val small = time(src)
-    val big = time(dst)
-    println(s"query,docs1x_s,docs${copies}x_s,ratio")
-    subset.foreach { q =>
-      if (small(q).isNaN || big(q).isNaN) println(s"$q,skipped,skipped,-")
-      else println(f"$q,${small(q)}%.2f,${big(q)}%.2f,${big(q) / small(q)}%.1f")
-    }
-    spark.stop()
+    ladder(spark, "docs", copies, subset, docsCorpus(spark, copies))
   }
 
-  /** Event-analytics-family 10x experiment: the streams-mode corpus (10x
-    * events AND 10x users at the same per-user density — the realistic
-    * growth axis for product analytics) timed over the funnel / cohort /
-    * transition / gap-fill / MAD / RFM family plus the streaming anomaly
-    * gate. Every operator is user-keyed, so the expectation is ~linear
-    * wall growth with flat per-user cost. */
-  private def eventsMain(copies: Int): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.local.dir", ShuffleDir.path)
-      .config("spark.shuffle.sort.bypassMergeThreshold", "1")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val src = "/root/testdata/sf0.1"
-    // Same replicated corpus (and stamp discipline) as the streams mode;
-    // `runMain graft.ScaleTest events 30` runs the 30x ladder (30M events,
-    // the point where a super-linear per-user kernel would visibly bend).
-    val dst = stagedDir(s"graft_events${copies}x_c${copies}_s1000000_", src)
-    if (!new java.io.File(s"$dst/_built").exists()) {
-      buildStreams(spark, src, dst, copies)
-      new java.io.File(s"$dst/_built").createNewFile()
-    }
-    val subset = Seq(
+  /** Event-analytics-family experiment: the streams-mode corpus (Nx events
+    * AND Nx users at the same per-user density — the realistic growth axis
+    * for product analytics) over the funnel / cohort / transition /
+    * gap-fill / MAD / RFM family plus the streaming anomaly gate. Every
+    * operator is user-keyed, so the expectation is ~linear wall growth
+    * with flat per-user cost; `events 30` runs the 30x ladder. */
+  private def eventsMain(spark: SparkSession, copies: Int): Unit = {
+    val dst = eventsCorpus(spark, copies)
+    // Landing zones are per-source-dir; staging them before the ladder
+    // keeps ingest out of the first timed row.
+    Seq(Src, dst).foreach(graft.streaming.EventStreams.stageEvents(spark, _))
+    ladder(spark, "events", copies, Seq(
       "q_event_funnel", "q_funnel_windowed", "q_funnel_latency",
       "q_cohort_retention", "q_event_transitions", "q_event_paths",
       "q_gap_fill", "q_anomaly_mad", "q_cusum_shift", "q_attribution",
-      "q_rfm_segments", "q_ab_test", "q_stream_anomaly_gate")
-    def time(dir: String): Map[String, Double] =
-      subset.map { name =>
-        val t0 = System.nanoTime()
-        SparkEntry.queries(name)(spark, dir)
-          .write.format("noop").mode("overwrite").save()
-        val dt = (System.nanoTime() - t0) / 1e9
-        TrackedCaches.release()
-        spark.catalog.clearCache()
-        name -> dt
-      }.toMap
-    graft.streaming.EventStreams.stageEvents(spark, src)
-    time(src) // warm
-    val small = time(src)
-    graft.streaming.EventStreams.stageEvents(spark, dst)
-    time(dst) // stage + warm the Nx landing zone untimed (streams-mode rule)
-    val big = time(dst)
-    println(s"query,events1x_s,events${copies}x_s,ratio")
-    subset.foreach { q =>
-      println(f"$q,${small(q)}%.2f,${big(q)}%.2f,${big(q) / small(q)}%.1f")
-    }
-    spark.stop()
+      "q_rfm_segments", "q_ab_test", "q_stream_anomaly_gate"),
+      dst, warmBig = true)
   }
 
   /** Streaming-family 10x experiment — see the object scaladoc. */
-  private def streamsMain(): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.local.dir", ShuffleDir.path)
-      .config("spark.shuffle.sort.bypassMergeThreshold", "1")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val src = "/root/testdata/sf0.1"
-    // Parameter-stamped path (copies, key stride) — same rebuild discipline
-    // as the other modes.
-    val dst =
-      stagedDir("graft_events10x_c10_s1000000_", src)
-    if (!new java.io.File(s"$dst/_built").exists()) {
-      buildStreams(spark, src, dst, 10)
-      new java.io.File(s"$dst/_built").createNewFile()
-    }
-    val subset = Seq(
+  private def streamsMain(spark: SparkSession): Unit = {
+    val dst = eventsCorpus(spark, 10)
+    Seq(Src, dst).foreach(graft.streaming.EventStreams.stageEvents(spark, _))
+    ladder(spark, "events", 10, Seq(
       "q_stream_tumbling", "q_stream_static_join", "q_stream_dedup",
       "q_stream_stream_join", "q_stream_session_window",
-      "q_stream_file_sink", "q_stream_cdc_apply")
-    def time(dir: String): Map[String, Double] =
-      subset.map { name =>
-        val t0 = System.nanoTime()
-        SparkEntry.queries(name)(spark, dir)
-          .write.format("noop").mode("overwrite").save()
-        val dt = (System.nanoTime() - t0) / 1e9
-        TrackedCaches.release()
-        spark.catalog.clearCache()
-        name -> dt
-      }.toMap
-    // Landing zones are per-source-dir (each dataset keeps its own base
-    // directory), so pre-stage each scale's zone before its timing loop;
-    // the first small() also warms the streaming machinery's code paths.
-    graft.streaming.EventStreams.stageEvents(spark, src)
-    time(src) // warm
-    val small = time(src)
-    graft.streaming.EventStreams.stageEvents(spark, dst)
-    val big = time(dst)
-    println("query,events1x_s,events10x_s,ratio")
-    subset.foreach { q =>
-      println(f"$q,${small(q)}%.2f,${big(q)}%.2f,${big(q) / small(q)}%.1f")
-    }
-    // The ingest near-dup filter and the LM quality gate stream DOCUMENTS,
-    // so their 10x axis is the docs-mode corpus (10x docs, preserved cluster
-    // structure): corpus index/model 10x, arrival stream 10x, same
-    // micro-batch count.
-    val docsDst =
-      stagedDir("graft_docs10x_c10_m5_d1000000_", src)
-    if (!new java.io.File(s"$docsDst/_built").exists()) {
-      buildDocs(spark, src, docsDst, 10)
-      new java.io.File(s"$docsDst/_built").createNewFile()
-    }
-    val docSubset = Seq("q_stream_ingest_dedup", "q_stream_quality_gate",
-      "q_stream_decontam")
-    def timeDocStream(name: String, dir: String): Double = {
-      val t0 = System.nanoTime()
-      SparkEntry.queries(name)(spark, dir)
-        .write.format("noop").mode("overwrite").save()
-      val dt = (System.nanoTime() - t0) / 1e9
-      TrackedCaches.release()
-      spark.catalog.clearCache()
-      dt
-    }
-    println("query,docs1x_s,docs10x_s,ratio")
-    docSubset.foreach { name =>
-      timeDocStream(name, src) // warm (first call also stages the 1x zone)
-      val sSmall = timeDocStream(name, src)
-      // The 10x zone needs the same pre-staging the 1x zone got from its
-      // warm call: without this, stageDocs' wipe+write of the 10x landing
-      // zone is billed into the first timed big run and inflates the ratio.
-      timeDocStream(name, docsDst) // warm + stage the 10x zone, untimed
-      val sBig = timeDocStream(name, docsDst)
-      println(f"$name,$sSmall%.2f,$sBig%.2f,${sBig / sSmall}%.1f")
-    }
-    // Strategy-crossover rows for the decontam gate: time BOTH screening
+      "q_stream_file_sink", "q_stream_cdc_apply"), dst)
+    // The ingest near-dup filter, the LM quality gate and the decontam
+    // gate stream DOCUMENTS, so their 10x axis is the docs-mode corpus
+    // (10x docs, preserved cluster structure): corpus index/model 10x,
+    // arrival stream 10x, same micro-batch count. Each stages its own
+    // landing zone on first call, hence the untimed Nx warm pass.
+    val docsDst = docsCorpus(spark, 10)
+    ladder(spark, "docs", 10, Seq("q_stream_ingest_dedup",
+      "q_stream_quality_gate", "q_stream_decontam"), docsDst, warmBig = true)
+    // Strategy-crossover rows for the decontam gate: BOTH screening
     // strategies at both scales (auto picks broadcast at these corpus
     // sizes — the forced-distributed rows measure the kernel the gate
     // switches to past BroadcastScreenMaxBytes, so the crossover is a
     // measurement, not an assertion).
-    println("query,mode,docs1x_s,docs10x_s")
     Seq("broadcast", "distributed").foreach { mode =>
+      println(s"graft.retrieval.screenMode=$mode")
       spark.conf.set("graft.retrieval.screenMode", mode)
-      try {
-        timeDocStream("q_stream_decontam", src)
-        val a = timeDocStream("q_stream_decontam", src)
-        timeDocStream("q_stream_decontam", docsDst)
-        val b = timeDocStream("q_stream_decontam", docsDst)
-        println(f"q_stream_decontam,$mode,$a%.2f,$b%.2f")
-      } finally spark.conf.unset("graft.retrieval.screenMode")
+      try ladder(spark, "docs", 10, Seq("q_stream_decontam"), docsDst, warmBig = true)
+      finally spark.conf.unset("graft.retrieval.screenMode")
     }
-    // The vector-ingest gate streams EMBEDDINGS, so its 10x axis is the
-    // vecs-mode corpus (10x genuinely distinct vectors — corpus IVF index
-    // 10x, arrival stream 10x). Same warm-then-time discipline.
-    val vecsDst =
-      stagedDir("graft_vecs10x_c10_v1000000_", src)
-    if (!new java.io.File(s"$vecsDst/_built").exists()) {
-      buildVecs(spark, src, vecsDst, 10)
-      new java.io.File(s"$vecsDst/_built").createNewFile()
-    }
-    println("query,vecs1x_s,vecs10x_s,ratio")
-    Seq("q_stream_vec_ingest").foreach { name =>
-      timeDocStream(name, src) // warm + stage the 1x zone
-      val sSmall = timeDocStream(name, src)
-      timeDocStream(name, vecsDst) // warm + stage the 10x zone, untimed
-      val sBig = timeDocStream(name, vecsDst)
-      println(f"$name,$sSmall%.2f,$sBig%.2f,${sBig / sSmall}%.1f")
-    }
-    spark.stop()
+    // The vector-ingest gate streams EMBEDDINGS: its 10x axis is the
+    // vecs-mode corpus (10x genuinely distinct vectors).
+    ladder(spark, "vecs", 10, Seq("q_stream_vec_ingest"), vecsCorpus(spark, 10),
+      warmBig = true)
   }
 
-  /** Vector-family 10x experiment: measures the recall-vs-scan-fraction
-    * ladder that sized the shipped IVF config (Similarity.centroidsFor /
-    * probesFor). The measurement that matters: on a uniform-random corpus
-    * recall@10 is a function of the SCAN FRACTION nearly independent of N
-    * (the 1x and 10x ladders coincide), so a fixed nprobe — a falling
-    * fraction of the sqrt(N)-growing cell count — decays recall (measured
-    * 0.78 -> 0.44 at 10x), while probesFor's fixed ~30% fraction holds it
-    * >= 0.80 at both scales. embeddings replicate 10x with a copy-keyed
-    * dimension rotation plus deterministic per-copy sign flips: a
-    * rotated/sign-flipped random vector is just another random vector (the
-    * corpus stays uniform), but it is FAR from its source (expected cosine
-    * ~0), so the 10x corpus has 10x genuinely distinct vectors — growth,
-    * not planted duplicates that would hand ANN its own copies as trivial
-    * neighbors. Reported per scale: annIvf/annLsh/brute wall time AND the
-    * (nprobe, scan fraction, recall@10) ladder including the shipped
-    * probesFor point at each scale. */
-  /** The standing-index ladders' shared session (the same config block
-    * every ladder main uses; `ext` adds GraftExtensions for mains whose
-    * queries need the registered plans/functions). */
-  private def ladderSession(ext: Boolean): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val b = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.local.dir", ShuffleDir.path)
-      .config("spark.shuffle.sort.bypassMergeThreshold", "1")
-      .config("spark.ui.enabled", "false")
-    val spark =
-      (if (ext) b.withExtensions(new graft.functions.GraftExtensions) else b)
-        .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark
-  }
-
-  /** Post-measurement hygiene OUTSIDE the timed window (the ladder rule:
-    * released caches must actually be reaped before the next row). */
-  private def settle(spark: SparkSession): Unit = {
-    graft.TrackedCaches.release()
-    spark.catalog.clearCache()
-    System.gc()
-    Thread.sleep(500)
+  /** One standing-index ladder leg: `body` measured by [[Harness]]
+    * (caches released), GC-settled after; a failed leg aborts. */
+  private def leg(spark: SparkSession)(body: => Unit): Double = {
+    val r = Harness.measure(spark)(body)
+    Harness.settle()
+    r.seconds
   }
 
   /** Standing-IVF-index cost-regime ladder: at 1x and `copies`x, measure
@@ -510,33 +299,22 @@ object ScaleTest {
     * grows, because probe cost is ~|probed cells| (the partition-pruned
     * scan) while rebuild pays training's N·√N kernel plus the corpus
     * assignment pass every call. Reuses the vecs mode's staged corpus. */
-  private def vecStandingMain(copies: Int): Unit = {
-    val spark = ladderSession(ext = false)
-    val src = "/root/testdata/sf0.1"
-    val dst = stagedDir(s"graft_vecs${copies}x_c${copies}_v1000000_", src)
-    if (!new java.io.File(s"$dst/_built").exists()) {
-      buildVecs(spark, src, dst, copies)
-      new java.io.File(s"$dst/_built").createNewFile()
-    }
+  private def vecStandingMain(spark: SparkSession, copies: Int): Unit = {
+    import graft.llm.AnnIndex
+    val dst = vecsCorpus(spark, copies)
     def run(tag: String, dir: String): Unit = {
       val base = s"${System.getProperty("java.io.tmpdir")}/graft_ivf_ladder"
       deleteRec(new java.io.File(base))
-      val q = graft.Tables.embeddings(spark, dir)
+      val q = Tables.embeddings(spark, dir)
         .filter(col("vec_id") < graft.llm.Similarity.NumQueries)
-      val t0 = System.nanoTime()
-      graft.llm.AnnIndex.buildIfStale(spark, dir, base)
-      val tb = (System.nanoTime() - t0) / 1e9
-      settle(spark)
-      val t1 = System.nanoTime()
-      graft.llm.AnnIndex.probe(spark, base, q)
-        .write.format("noop").mode("overwrite").save()
-      val tp = (System.nanoTime() - t1) / 1e9
-      settle(spark)
+      def probe() = leg(spark)(Harness.noop(AnnIndex.probe(spark, base, q)))
+      val tb = leg(spark)(AnnIndex.buildIfStale(spark, dir, base))
+      val tp = probe()
       // Append leg: a 1% arrival slice (fresh ids past the corpus max so
       // they're disjoint) assigned to the FROZEN centroids and appended
       // into its cells — must be batch-scale — then the same query set
       // probed against the grown index.
-      val emb = graft.Tables.embeddings(spark, dir)
+      val emb = Tables.embeddings(spark, dir)
       val maxId = emb.agg(max(col("vec_id"))).head().getLong(0)
       // Materialize the arrival slice OUTSIDE the timed window: deriving
       // it is a corpus-scale filter the ingest source pays, not the
@@ -545,86 +323,48 @@ object ScaleTest {
         .select((col("vec_id") + maxId + 1).as("vec_id"),
           col("embedding"), col("label"))
         .localCheckpoint()
-      val ta0 = System.nanoTime()
-      graft.llm.AnnIndex.append(spark, base, arrivals)
-      val ta = (System.nanoTime() - ta0) / 1e9
-      settle(spark)
-      val tp20 = System.nanoTime()
-      graft.llm.AnnIndex.probe(spark, base, q)
-        .write.format("noop").mode("overwrite").save()
-      val tp2 = (System.nanoTime() - tp20) / 1e9
-      settle(spark)
+      val ta = leg(spark)(AnnIndex.append(spark, base, arrivals))
+      val tp2 = probe()
       // The compaction case: four MORE 1% appends (disjoint fresh-id
-      // slices) pile a file per touched cell per append onto the layout;
-      // probe the accumulated state, compact, probe again — the delta
-      // between those two probes is the file-count tax compaction
+      // slices, untimed) pile a file per touched cell per append onto the
+      // layout; probe the accumulated state, compact, probe again — the
+      // delta between those two probes is the file-count tax compaction
       // recovers.
-      (1 to 4).foreach { j =>
-        graft.llm.AnnIndex.append(spark, base,
+      leg(spark)((1 to 4).foreach { j =>
+        AnnIndex.append(spark, base,
           emb.filter(col("vec_id") % 100 === 7 + j)
             .select((col("vec_id") + (j + 1) * (maxId + 1)).as("vec_id"),
               col("embedding"), col("label"))
             .localCheckpoint())
-      }
-      settle(spark)
-      val tp30 = System.nanoTime()
-      graft.llm.AnnIndex.probe(spark, base, q)
-        .write.format("noop").mode("overwrite").save()
-      val tp3 = (System.nanoTime() - tp30) / 1e9
-      settle(spark)
-      val tc0 = System.nanoTime()
-      graft.llm.AnnIndex.compact(spark, base)
-      val tc = (System.nanoTime() - tc0) / 1e9
-      settle(spark)
-      val tp40 = System.nanoTime()
-      graft.llm.AnnIndex.probe(spark, base, q)
-        .write.format("noop").mode("overwrite").save()
-      val tp4 = (System.nanoTime() - tp40) / 1e9
-      settle(spark)
-      // Delete leg (round 15): purge a 1% corpus slice by id — the
-      // resolve is one column-pruned (vec_id, cell) scan, so the leg's
-      // ratio measures exactly the term that grows with the corpus —
-      // then probe the tombstone-anti-join regime, drain via compaction,
-      // and probe the physically-purged layout.
+      })
+      val tp3 = probe()
+      val tc = leg(spark)(AnnIndex.compact(spark, base))
+      val tp4 = probe()
+      // Delete leg: purge a 1% corpus slice by id — the resolve is one
+      // column-pruned (vec_id, cell) scan, so the leg's ratio measures
+      // exactly the term that grows with the corpus — then probe the
+      // tombstone-anti-join regime, drain via compaction, and probe the
+      // physically-purged layout.
       val doomed = emb.filter(col("vec_id") % 100 === 13)
         .select("vec_id").localCheckpoint()
-      val td0 = System.nanoTime()
-      graft.llm.AnnIndex.delete(spark, base, doomed)
-      val tdel = (System.nanoTime() - td0) / 1e9
-      settle(spark)
-      val tp50 = System.nanoTime()
-      graft.llm.AnnIndex.probe(spark, base, q)
-        .write.format("noop").mode("overwrite").save()
-      val tp5 = (System.nanoTime() - tp50) / 1e9
-      settle(spark)
-      val tc20 = System.nanoTime()
-      graft.llm.AnnIndex.compact(spark, base)
-      val tc2 = (System.nanoTime() - tc20) / 1e9
-      settle(spark)
-      val tp60 = System.nanoTime()
-      graft.llm.AnnIndex.probe(spark, base, q)
-        .write.format("noop").mode("overwrite").save()
-      val tp6 = (System.nanoTime() - tp60) / 1e9
-      settle(spark)
-      val t2 = System.nanoTime()
-      SparkEntry.queries("q_ann_ivf")(spark, dir)
-        .write.format("noop").mode("overwrite").save()
-      val tr = (System.nanoTime() - t2) / 1e9
-      settle(spark)
+      val tdel = leg(spark)(AnnIndex.delete(spark, base, doomed))
+      val tp5 = probe()
+      val tc2 = leg(spark)(AnnIndex.compact(spark, base))
+      val tp6 = probe()
+      val tr = leg(spark)(Harness.noop(SparkEntry.queries("q_ann_ivf")(spark, dir)))
       println(f"standing,$tag,build=$tb%.2f,probe=$tp%.2f," +
         f"append=$ta%.2f,probe2=$tp2%.2f,probe_5appends=$tp3%.2f," +
         f"compact=$tc%.2f,probe_compacted=$tp4%.2f," +
         f"delete=$tdel%.2f,probe_deleted=$tp5%.2f,compact2=$tc2%.2f," +
         f"probe_drained=$tp6%.2f,rebuild=$tr%.2f")
     }
-    run("warm", src) // warm code paths; discard
+    run("warm", Src) // warm code paths; discard
     println("standing,scale,build_s,probe_s,append_1pct_s,probe2_s," +
       "probe_5appends_s,compact_s,probe_compacted_s," +
       "delete_1pct_s,probe_deleted_s,compact2_s,probe_drained_s," +
       "rebuild_annivf_s")
-    run("vecs1x", src)
+    run("vecs1x", Src)
     run(s"vecs${copies}x", dst)
-    spark.stop()
   }
 
   /** Standing-BM25-index cost-regime ladder — the retrieval sibling of
@@ -634,14 +374,9 @@ object ScaleTest {
     * scans partition-prune to the query's term buckets, so probe cost
     * tracks the QUERY's posting lists while rebuild pays the corpus
     * tokenize + index build every call. */
-  private def bm25StandingMain(copies: Int): Unit = {
-    val spark = ladderSession(ext = true)
-    val src = "/root/testdata/sf0.1"
-    val dst = stagedDir(s"graft_docs${copies}x_c${copies}_m5_d1000000_", src)
-    if (!new java.io.File(s"$dst/_built").exists()) {
-      buildDocs(spark, src, dst, copies)
-      new java.io.File(s"$dst/_built").createNewFile()
-    }
+  private def bm25StandingMain(spark: SparkSession, copies: Int): Unit = {
+    import graft.llm.Retrieval
+    val dst = docsCorpus(spark, copies)
     // The serving probe the index exists for: ONE short query (the first
     // 8 distinct terms of doc 0 — deterministic), whose bucket set is a
     // strict subset of the layout, vs the shipped q_bm25_standing query
@@ -649,7 +384,7 @@ object ScaleTest {
     // every bucket, so pruning cannot help it; same lesson as the
     // evolving gate's route census at bench shape).
     def shortQuery(dir: String): DataFrame = {
-      val text = graft.Tables.documents(spark, dir)
+      val text = Tables.documents(spark, dir)
         .filter(col("doc_id") === 0L).select("text")
         .collect()(0).getString(0)
       val terms = text.split(" ").distinct.take(8)
@@ -659,152 +394,103 @@ object ScaleTest {
     def run(tag: String, dir: String, nBuckets: Int): Unit = {
       val base = s"${System.getProperty("java.io.tmpdir")}/graft_bm25_ladder"
       deleteRec(new java.io.File(base))
-      val q = graft.Tables.documents(spark, dir).select("doc_id", "text")
-        .filter(col("doc_id") < graft.llm.Retrieval.NumQueries)
-      val t0 = System.nanoTime()
-      graft.llm.Retrieval.bm25BuildIfStale(spark, dir, base, nBuckets)
-      val tb = (System.nanoTime() - t0) / 1e9
-      settle(spark)
-      val t1 = System.nanoTime()
-      graft.llm.Retrieval.bm25Probe(spark, base, q)
-        .write.format("noop").mode("overwrite").save()
-      val tp = (System.nanoTime() - t1) / 1e9
-      settle(spark)
-      val t1s = System.nanoTime()
-      graft.llm.Retrieval.bm25Probe(spark, base, shortQuery(dir))
-        .write.format("noop").mode("overwrite").save()
-      val tps = (System.nanoTime() - t1s) / 1e9
-      settle(spark)
-      // Delete leg (round 16): a ~1% takedown by id — the BM25 delete
-      // is a pure doc-arity live-docs mask (no resolve pass, no deltas:
-      // frozen stats), so the delete itself must be takedown-scale flat
-      // across the ladder; the corpus-scale terms are the undrained
-      // probes' broadcast anti-join over their pruned posting slices
-      // and the compaction's full per-bucket rewrite.
-      val doomedIds = graft.Tables.documents(spark, dir)
+      val q = Tables.documents(spark, dir).select("doc_id", "text")
+        .filter(col("doc_id") < Retrieval.NumQueries)
+      def probeShort() =
+        leg(spark)(Harness.noop(Retrieval.bm25Probe(spark, base, shortQuery(dir))))
+      val tb = leg(spark)(Retrieval.bm25BuildIfStale(spark, dir, base, nBuckets))
+      val tp = leg(spark)(Harness.noop(Retrieval.bm25Probe(spark, base, q)))
+      val tps = probeShort()
+      // Delete leg: a ~1% takedown by id — the BM25 delete is a pure
+      // doc-arity live-docs mask (no resolve pass, no deltas: frozen
+      // stats), so the delete itself must be takedown-scale flat across
+      // the ladder; the corpus-scale terms are the undrained probes'
+      // broadcast anti-join over their pruned posting slices and the
+      // compaction's full per-bucket rewrite.
+      val doomedIds = Tables.documents(spark, dir)
         .filter(col("doc_id") % 100 === 1).select("doc_id")
         .localCheckpoint()
-      val td0 = System.nanoTime()
-      graft.llm.Retrieval.bm25Delete(spark, base, doomedIds)
-      val tdel = (System.nanoTime() - td0) / 1e9
-      settle(spark)
-      val tp50 = System.nanoTime()
-      graft.llm.Retrieval.bm25Probe(spark, base, shortQuery(dir))
-        .write.format("noop").mode("overwrite").save()
-      val tp5 = (System.nanoTime() - tp50) / 1e9
-      settle(spark)
-      val tc20 = System.nanoTime()
-      graft.llm.Retrieval.bm25Compact(spark, base)
-      val tc2 = (System.nanoTime() - tc20) / 1e9
-      settle(spark)
-      val tp60 = System.nanoTime()
-      graft.llm.Retrieval.bm25Probe(spark, base, shortQuery(dir))
-        .write.format("noop").mode("overwrite").save()
-      val tp6 = (System.nanoTime() - tp60) / 1e9
-      settle(spark)
-      val t2 = System.nanoTime()
-      SparkEntry.queries("q_bm25_topk")(spark, dir)
-        .write.format("noop").mode("overwrite").save()
-      val tr = (System.nanoTime() - t2) / 1e9
-      settle(spark)
+      val tdel = leg(spark)(Retrieval.bm25Delete(spark, base, doomedIds))
+      val tp5 = probeShort()
+      val tc2 = leg(spark)(Retrieval.bm25Compact(spark, base))
+      val tp6 = probeShort()
+      val tr = leg(spark)(Harness.noop(SparkEntry.queries("q_bm25_topk")(spark, dir)))
       println(f"standing,$tag,b$nBuckets,build=$tb%.2f,probe5full=$tp%.2f," +
         f"probeshort=$tps%.2f,delete=$tdel%.2f,probeshort_deleted=$tp5%.2f," +
         f"compact=$tc2%.2f,probeshort_drained=$tp6%.2f,rebuild=$tr%.2f")
     }
-    run("warm", src, 64) // warm code paths; discard
+    run("warm", Src, 64) // warm code paths; discard
     println("standing,scale,buckets,build_s,probe_5full_s,probe_short_s," +
       "delete_1pct_s,probe_short_deleted_s,compact_drain_s," +
       "probe_short_drained_s,rebuild_bm25topk_s")
-    run("docs1x", src, 64)
+    run("docs1x", Src, 64)
     run(s"docs${copies}x", dst, 64)
     // The layout knob: same corpus, 1024 buckets — the short query's
     // pruned fraction drops ~16x; the 5-full-doc set still covers the
     // vocabulary and stays un-prunable by design.
     run(s"docs${copies}x", dst, 1024)
-    spark.stop()
   }
 
   /** Standing-shingle-index cost-regime ladder — the dedup sibling of
     * [[bm25StandingMain]], on the docs ladder's staged corpus: build-once
     * (corpus shingle postings + df + standing sizes) vs the probe-only
     * batch screen vs the rebuild-every-time q_dedup_incremental, whose
-    * judge-decomposed 100× profile is DOMINATED by the corpus-linear
-    * capped-index build the standing form amortizes away. */
-  private def dedupStandingMain(copies: Int): Unit = {
-    val spark = ladderSession(ext = true)
-    val src = "/root/testdata/sf0.1"
-    val dst = stagedDir(s"graft_docs${copies}x_c${copies}_m5_d1000000_", src)
-    if (!new java.io.File(s"$dst/_built").exists()) {
-      buildDocs(spark, src, dst, copies)
-      new java.io.File(s"$dst/_built").createNewFile()
-    }
+    * 100× profile is DOMINATED by the corpus-linear capped-index build
+    * the standing form amortizes away. */
+  private def dedupStandingMain(spark: SparkSession, copies: Int): Unit = {
+    import graft.llm.Dedup
+    val dst = docsCorpus(spark, copies)
     def run(tag: String, dir: String): Unit = {
       val base = s"${System.getProperty("java.io.tmpdir")}/graft_shingle_ladder"
       deleteRec(new java.io.File(base))
-      val fullBatch = graft.Tables.documents(spark, dir)
+      val fullBatch = Tables.documents(spark, dir)
         .filter(col("doc_id") % 5 === 0).select("doc_id", "text")
       // The serving-shape batch: a SMALL arrival slice (1% of the batch
       // ids) — per-batch cost must track the BATCH, not the corpus.
       val smallBatch = fullBatch.filter(col("doc_id") % 500 === 0)
-      val t0 = System.nanoTime()
-      graft.llm.Dedup.shingleBuildIfStale(spark, dir, base)
-      val tb = (System.nanoTime() - t0) / 1e9
-      settle(spark)
-      val t1 = System.nanoTime()
-      graft.llm.Dedup.shingleProbe(spark, base, fullBatch)
-        .write.format("noop").mode("overwrite").save()
-      val tp = (System.nanoTime() - t1) / 1e9
-      settle(spark)
-      val t1s = System.nanoTime()
-      graft.llm.Dedup.shingleProbe(spark, base, smallBatch)
-        .write.format("noop").mode("overwrite").save()
-      val tps = (System.nanoTime() - t1s) / 1e9
-      settle(spark)
+      def probe(batch: DataFrame) =
+        leg(spark)(Harness.noop(Dedup.shingleProbe(spark, base, batch)))
+      val tb = leg(spark)(Dedup.shingleBuildIfStale(spark, dir, base))
+      val tp = probe(fullBatch)
+      val tps = probe(smallBatch)
       // The commit leg: accept arrival 1's survivors into the standing
       // state (timing includes the survivor probe — that probe+commit
       // pair IS the per-arrival serving cost), then probe a SECOND
       // arrival slice against the grown index. Both must track the
       // batch, not the corpus.
-      val small2 = fullBatch.filter(col("doc_id") % 500 === 250)
-      val t1c = System.nanoTime()
-      val survivors = smallBatch.join(
-        graft.llm.Dedup.shingleProbe(spark, base, smallBatch)
-          .filter(!col("is_dup")).select("doc_id"), Seq("doc_id"), "left_semi")
-      graft.llm.Dedup.shingleCommit(spark, base, survivors)
-      val tc = (System.nanoTime() - t1c) / 1e9
-      settle(spark)
-      val t1p2 = System.nanoTime()
-      graft.llm.Dedup.shingleProbe(spark, base, small2)
-        .write.format("noop").mode("overwrite").save()
-      val tp2 = (System.nanoTime() - t1p2) / 1e9
-      settle(spark)
-      // Delete leg (round 16): a takedown of a ~1% corpus slice,
-      // restricted OUTSIDE the timed window to the population the
-      // delete contract admits — docs with live postings (an
-      // all-over-cap doc is refused as unprovable) and docs whose
-      // removal would not bring any shingle back under the df cap
-      // (the cap-resurrection refusal; exclusion is one monotone pass:
-      // removing docs only lowers per-shingle delete counts, so no new
-      // crossing can appear). The exclusions are LOGGED — a ladder leg
-      // that silently shrank its takedown would overstate nothing but
-      // still misreport coverage. The shingle delete itself carries no
-      // corpus-linear resolve term (it re-shingles only the handed
-      // text); the corpus term this leg watches is the vocabulary-
-      // bucket-pruned dfc/postings reads, which degenerate toward full
-      // scans as the takedown's vocabulary covers all buckets.
-      val cand0 = graft.Tables.documents(spark, dir)
+      val tc = leg(spark) {
+        val survivors = smallBatch.join(
+          Dedup.shingleProbe(spark, base, smallBatch)
+            .filter(!col("is_dup")).select("doc_id"), Seq("doc_id"), "left_semi")
+        Dedup.shingleCommit(spark, base, survivors)
+      }
+      val tp2 = probe(fullBatch.filter(col("doc_id") % 500 === 250))
+      // Delete leg: a takedown of a ~1% corpus slice, restricted OUTSIDE
+      // the timed window to the population the delete contract admits —
+      // docs with live postings (an all-over-cap doc is refused as
+      // unprovable) and docs whose removal would not bring any shingle
+      // back under the df cap (the cap-resurrection refusal; exclusion is
+      // one monotone pass: removing docs only lowers per-shingle delete
+      // counts, so no new crossing can appear). The exclusions are
+      // LOGGED — a ladder leg that silently shrank its takedown would
+      // misreport coverage. The shingle delete itself carries no
+      // corpus-linear resolve term (it re-shingles only the handed text);
+      // the corpus term this leg watches is the vocabulary-bucket-pruned
+      // dfc/postings reads, which degenerate toward full scans as the
+      // takedown's vocabulary covers all buckets.
+      val cand0 = Tables.documents(spark, dir)
         .filter(col("doc_id") % 5 =!= 0 && col("doc_id") % 100 === 1)
         .select("doc_id", "text")
       val provable = cand0.join(
         spark.read.parquet(s"$base/n0").select("doc_id").distinct(),
         Seq("doc_id"), "left_semi").localCheckpoint()
-      val candSh = graft.llm.Dedup.shinglesOf(provable).localCheckpoint()
+      val candSh = Dedup.shinglesOf(provable).localCheckpoint()
       val ddel = candSh.groupBy("sh").agg(count(lit(1)).as("ddel"))
       val df0 = spark.read.parquet(s"$base/dfc")
         .groupBy("sh").agg(sum("dfc").as("df0"))
       val crossingSh = ddel.join(df0, Seq("sh"))
-        .filter(col("df0") > graft.llm.Dedup.ShingleDfCap &&
-          col("df0") - col("ddel") <= graft.llm.Dedup.ShingleDfCap)
+        .filter(col("df0") > Dedup.ShingleDfCap &&
+          col("df0") - col("ddel") <= Dedup.ShingleDfCap)
         .select("sh")
       val doomed = provable.join(
         candSh.join(crossingSh, Seq("sh"), "left_semi")
@@ -812,42 +498,22 @@ object ScaleTest {
         Seq("doc_id"), "left_anti").localCheckpoint()
       println(s"standing,$tag,delete_slice: candidates=${cand0.count()} " +
         s"provable=${provable.count()} kept=${doomed.count()}")
-      settle(spark)
-      val td0 = System.nanoTime()
-      graft.llm.Dedup.shingleDelete(spark, base, doomed)
-      val tdel = (System.nanoTime() - td0) / 1e9
-      settle(spark)
-      val tp50 = System.nanoTime()
-      graft.llm.Dedup.shingleProbe(spark, base, smallBatch)
-        .write.format("noop").mode("overwrite").save()
-      val tp5 = (System.nanoTime() - tp50) / 1e9
-      settle(spark)
-      val tc20 = System.nanoTime()
-      graft.llm.Dedup.shingleCompact(spark, base)
-      val tc2 = (System.nanoTime() - tc20) / 1e9
-      settle(spark)
-      val tp60 = System.nanoTime()
-      graft.llm.Dedup.shingleProbe(spark, base, smallBatch)
-        .write.format("noop").mode("overwrite").save()
-      val tp6 = (System.nanoTime() - tp60) / 1e9
-      settle(spark)
-      val t2 = System.nanoTime()
-      SparkEntry.queries("q_dedup_incremental")(spark, dir)
-        .write.format("noop").mode("overwrite").save()
-      val tr = (System.nanoTime() - t2) / 1e9
-      settle(spark)
+      val tdel = leg(spark)(Dedup.shingleDelete(spark, base, doomed))
+      val tp5 = probe(smallBatch)
+      val tc2 = leg(spark)(Dedup.shingleCompact(spark, base))
+      val tp6 = probe(smallBatch)
+      val tr = leg(spark)(Harness.noop(SparkEntry.queries("q_dedup_incremental")(spark, dir)))
       println(f"standing,$tag,build=$tb%.2f,probefull=$tp%.2f," +
         f"probesmall=$tps%.2f,commit=$tc%.2f,probe2=$tp2%.2f," +
         f"delete=$tdel%.2f,probe_deleted=$tp5%.2f,compact=$tc2%.2f," +
         f"probe_drained=$tp6%.2f,rebuild=$tr%.2f")
     }
-    run("warm", src) // warm code paths; discard
+    run("warm", Src) // warm code paths; discard
     println("standing,scale,build_s,probe_fullbatch_s,probe_1pct_s," +
       "commit_1pct_s,probe2_1pct_s,delete_1pct_s,probe_deleted_s," +
       "compact_drain_s,probe_drained_s,rebuild_incremental_s")
-    run("docs1x", src)
+    run("docs1x", Src)
     run(s"docs${copies}x", dst)
-    spark.stop()
   }
 
   /** Evolving-decontam-index delete-lifecycle ladder — the distributed
@@ -860,122 +526,68 @@ object ScaleTest {
     * layout. The corpus-scale terms to watch: the screen's pruned
     * posting reads (batch-vocabulary buckets, whose per-bucket size
     * grows with the corpus) and the compaction rewrite. */
-  private def evoStandingMain(copies: Int): Unit = {
-    val spark = ladderSession(ext = true)
-    val src = "/root/testdata/sf0.1"
-    val dst = stagedDir(s"graft_docs${copies}x_c${copies}_m5_d1000000_", src)
-    if (!new java.io.File(s"$dst/_built").exists()) {
-      buildDocs(spark, src, dst, copies)
-      new java.io.File(s"$dst/_built").createNewFile()
-    }
-    graft.plans.TopKPerKey.ensureRegistered(spark)
+  private def evoStandingMain(spark: SparkSession, copies: Int): Unit = {
+    val dst = docsCorpus(spark, copies)
     def run(tag: String, dir: String): Unit = {
       val base =
         s"${System.getProperty("java.io.tmpdir")}/graft_evodist_ladder"
       deleteRec(new java.io.File(base))
-      val docs = graft.Tables.documents(spark, dir).select("doc_id", "text")
+      val docs = Tables.documents(spark, dir).select("doc_id", "text")
       val seed = docs.filter(col("doc_id") % 3 === 0)
       // Fixed serving-shape arrival batch (~0.3% of the held-out pool) —
       // the same screen kernel the streaming twin pays per micro-batch.
       val batch = docs.filter(col("doc_id") % 3 =!= 0 &&
         pmod(xxhash64(col("doc_id")), lit(300L)) === 0L).localCheckpoint()
       val inc = new graft.llm.Retrieval.EvolvingDistIndex(spark, base)
-      val t0 = System.nanoTime()
-      inc.append(seed)
-      val tb = (System.nanoTime() - t0) / 1e9
-      settle(spark)
-      val t1 = System.nanoTime()
-      inc.screen(batch).write.format("noop").mode("overwrite").save()
-      val ts1 = (System.nanoTime() - t1) / 1e9
-      settle(spark)
+      def screen() = leg(spark)(Harness.noop(inc.screen(batch)))
+      val tb = leg(spark)(inc.append(seed))
+      val ts1 = screen()
       // ids ≡ 0 (mod 3) ∧ ≡ 1 (mod 100) — a ~1% slice of the seed, by
       // CRT one residue class mod 300. Derived outside the timed window.
       val doomed = seed.filter(col("doc_id") % 100 === 1)
         .select("doc_id").localCheckpoint()
-      val td0 = System.nanoTime()
-      inc.delete(doomed)
-      val tdel = (System.nanoTime() - td0) / 1e9
-      settle(spark)
-      val t2 = System.nanoTime()
-      inc.screen(batch).write.format("noop").mode("overwrite").save()
-      val ts2 = (System.nanoTime() - t2) / 1e9
-      settle(spark)
-      val tc0 = System.nanoTime()
-      inc.compact()
-      val tc = (System.nanoTime() - tc0) / 1e9
-      settle(spark)
-      val t3 = System.nanoTime()
-      inc.screen(batch).write.format("noop").mode("overwrite").save()
-      val ts3 = (System.nanoTime() - t3) / 1e9
-      settle(spark)
+      val tdel = leg(spark)(inc.delete(doomed))
+      val ts2 = screen()
+      val tc = leg(spark)(inc.compact())
+      val ts3 = screen()
       println(f"standing,$tag,seed=$tb%.2f,screen=$ts1%.2f," +
         f"delete=$tdel%.2f,screen_deleted=$ts2%.2f,compact=$tc%.2f," +
         f"screen_drained=$ts3%.2f")
     }
-    run("warm", src) // warm code paths; discard
+    run("warm", Src) // warm code paths; discard
     println("standing,scale,seed_append_s,screen_s,delete_1pct_s," +
       "screen_deleted_s,compact_drain_s,screen_drained_s")
-    run("docs1x", src)
+    run("docs1x", Src)
     run(s"docs${copies}x", dst)
-    spark.stop()
   }
 
-  private def vecsMain(copies: Int): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.local.dir", ShuffleDir.path)
-      .config("spark.shuffle.sort.bypassMergeThreshold", "1")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val src = "/root/testdata/sf0.1"
-    // Parameter-stamped path (copies, id stride) — same rebuild discipline
-    // as the other modes; `runMain graft.ScaleTest vecs 30` runs the 30x
-    // ladder (300k vectors — where a super-linear candidate generator or a
-    // snapshot-layout term would visibly bend, per the round-10 lesson
-    // that 10x hid both decontam scale bugs).
-    val dst =
-      stagedDir(s"graft_vecs${copies}x_c${copies}_v1000000_", src)
-    if (!new java.io.File(s"$dst/_built").exists()) {
-      buildVecs(spark, src, dst, copies)
-      new java.io.File(s"$dst/_built").createNewFile()
-    }
-    val subset = Seq("q_ann_topk", "q_ann_lsh", "q_ann_ivf",
+  /** Vector-family experiment: measures the recall-vs-scan-fraction
+    * ladder that sized the shipped IVF config (Similarity.centroidsFor /
+    * probesFor). The measurement that matters: on a uniform-random corpus
+    * recall@10 is a function of the SCAN FRACTION nearly independent of N
+    * (the 1x and 10x ladders coincide), so a fixed nprobe — a falling
+    * fraction of the sqrt(N)-growing cell count — decays recall (measured
+    * 0.78 -> 0.44 at 10x), while probesFor's fixed ~30% fraction holds it
+    * >= 0.80 at both scales. embeddings replicate with a copy-keyed
+    * dimension rotation plus deterministic per-copy sign flips: a
+    * rotated/sign-flipped random vector is just another random vector (the
+    * corpus stays uniform), but it is FAR from its source (expected cosine
+    * ~0), so the Nx corpus has Nx genuinely distinct vectors — growth,
+    * not planted duplicates that would hand ANN its own copies as trivial
+    * neighbors. Reported per scale: annIvf/annLsh/brute wall time AND the
+    * (nprobe, scan fraction, recall@10) ladder including the shipped
+    * probesFor point at each scale; `vecs 30` runs the 30x ladder. */
+  private def vecsMain(spark: SparkSession, copies: Int): Unit = {
+    val dst = vecsCorpus(spark, copies)
+    ladder(spark, "vecs", copies, Seq("q_ann_topk", "q_ann_lsh", "q_ann_ivf",
       "q_ann_ivf_rescore", "q_rand_projection", "q_vec_quantize",
-      "q_cluster_profile", "q_hard_negatives")
-    def time(dir: String): Map[String, Double] =
-      subset.map { name =>
-        val t0 = System.nanoTime()
-        SparkEntry.queries(name)(spark, dir)
-          .write.format("noop").mode("overwrite").save()
-        val dt = (System.nanoTime() - t0) / 1e9
-        graft.TrackedCaches.release()
-        spark.catalog.clearCache()
-        // Post-query hygiene OUTSIDE the timed window — docsMain's 100x
-        // lesson applies here identically: a deep-scale neighbor's
-        // spill/broadcast debris inflated q_rand_projection 2.6x and
-        // q_vec_quantize 5.6x in the first 100x vecs run until the
-        // explicit GC let the ContextCleaner reap between rows.
-        System.gc()
-        Thread.sleep(500)
-        name -> dt
-      }.toMap
-    time(src) // warm code paths
-    val small = time(src)
-    val big = time(dst)
-    println(s"query,vecs1x_s,vecs${copies}x_s,ratio")
-    subset.foreach { q =>
-      println(f"$q,${small(q)}%.2f,${big(q)}%.2f,${big(q) / small(q)}%.1f")
-    }
+      "q_cluster_profile", "q_hard_negatives"), dst)
     // Recall@10 ladder of IVF vs brute force at each scale: sweep the probe
     // budget and report (nprobe, scan fraction, recall) so the cost of any
     // recall target is measured, not asserted — on THIS corpus (uniform
     // random, the adversarial case) and on what real clustered data would
     // only improve.
-    def ladder(tag: String, dir: String, probes: Seq[Int]): Unit = {
+    def recall(tag: String, dir: String, probes: Seq[Int]): Unit = {
       def top(df: org.apache.spark.sql.DataFrame): Set[(Long, Long)] = {
         val w = org.apache.spark.sql.expressions.Window
           .partitionBy("query_id").orderBy(col("cos").desc, col("neighbor_id"))
@@ -1002,11 +614,11 @@ object ScaleTest {
     // budget (2/7 .. 12/7 of it — at 10x that reproduces the historical
     // {12,24,36,42,48,72} sweep exactly).
     println("scale,k_cells,nprobe,scan_fraction,ivf_recall_at_10")
-    ladder("vecs1x", src, Seq(6, 12, 14, 18, 24))
+    recall("vecs1x", Src, Seq(6, 12, 14, 18, 24))
     val nBig = spark.read.parquet(s"$dst/embeddings.parquet").count()
     val npBig = graft.llm.Similarity.probesFor(
       graft.llm.Similarity.centroidsFor(nBig))
-    ladder(s"vecs${copies}x", dst,
+    recall(s"vecs${copies}x", dst,
       Seq(2, 4, 6, 7, 8, 12).map(m => (npBig * m) / 7).distinct.filter(_ >= 1))
     // CLUSTERED ladder — the uniform corpus above is the adversarial case
     // that sized the shipped ~30% budget; real embeddings cluster. These
@@ -1025,9 +637,8 @@ object ScaleTest {
     }
     // k=45 cells at N=2000, k=141 at N=20000; sweeps cover 2-31% of cells
     // including the shipped probesFor point (14 / 42) at each scale.
-    ladder("clustered1x", clusteredDir(40, 50), Seq(1, 2, 4, 9, 14))
-    ladder("clustered10x", clusteredDir(400, 50), Seq(2, 4, 7, 14, 42))
-    spark.stop()
+    recall("clustered1x", clusteredDir(40, 50), Seq(1, 2, 4, 9, 14))
+    recall("clustered10x", clusteredDir(400, 50), Seq(2, 4, 7, 14, 42))
   }
 
   /** Parameter-stamped path of the synthetic clustered corpus (independent
@@ -1129,10 +740,8 @@ object ScaleTest {
     val cMax = 1000000L // key offset stride per copy
     def copyUnion(df: DataFrame, f: (DataFrame, Int) => DataFrame): DataFrame =
       (0 until copies).map(i => f(df, i)).reduce(_ unionByName _)
-
-    val cust = spark.read.parquet(s"$src/customer.parquet")
-    copyUnion(cust, (df, i) => df.withColumn("c_custkey", col("c_custkey") + i * cMax))
-      .write.mode("overwrite").parquet(s"$dst/customer.parquet")
+    // customer and events: the streams-mode replica.
+    buildStreams(spark, src, dst, copies)
 
     val ord = spark.read.parquet(s"$src/orders.parquet")
     copyUnion(ord, (df, i) => df
@@ -1145,34 +754,11 @@ object ScaleTest {
       .withColumn("l_orderkey", col("l_orderkey") + i * cMax))
       .write.mode("overwrite").parquet(s"$dst/lineitem.parquet")
 
-    // events: keep ns-as-long staging out of it — convert through Tables
-    // (ts becomes TIMESTAMP) and write micros, then read plain.
-    val ev = Tables.events(spark, src)
-    copyUnion(ev, (df, i) => df
-      .withColumn("event_id", col("event_id") + i * cMax)
-      .withColumn("user_id", col("user_id") + i * cMax))
-      .write.mode("overwrite").parquet(s"$dst/events.parquet")
-
     Seq("nation", "region", "part", "supplier", "documents", "embeddings")
       .foreach { t =>
         spark.read.parquet(s"$src/$t.parquet")
           .write.mode("overwrite").parquet(s"$dst/$t.parquet")
       }
-  }
-
-  private def soakSession(): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.local.dir", ShuffleDir.path)
-      .config("spark.shuffle.sort.bypassMergeThreshold", "1")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new graft.functions.GraftExtensions)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark
   }
 
   private def parquetFileCount(dir: String): Long = {
@@ -1200,37 +786,31 @@ object ScaleTest {
   private def runSoak(spark: SparkSession, nBatches: Int, name: String,
       base: String, filesDir: String, fileTrigger: Long,
       probeLabel: String, mutateLabel: String,
-      batchOf: Int => org.apache.spark.sql.DataFrame,
-      probe: org.apache.spark.sql.DataFrame => Seq[String],
-      mutate: org.apache.spark.sql.DataFrame => Unit,
+      batchOf: Int => DataFrame,
+      probe: DataFrame => Seq[String],
+      mutate: DataFrame => Unit,
       compact: () => Unit): Unit = {
     val walls = Array.ofDim[Double](nBatches)
     var compactions = 0
     for (b <- 0 until nBatches) {
       val batch = batchOf(b)
-      def probed(): Seq[String] = {
-        val v = probe(batch)
-        TrackedCaches.release(); spark.catalog.clearCache()
-        v
+      def probed(): (Seq[String], Double) = {
+        var v = Seq.empty[String]
+        val s = Harness.measure(spark) { v = probe(batch) }.seconds
+        (v, s)
       }
-      val ts = System.nanoTime()
-      val v1 = probed()
-      val probeS = (System.nanoTime() - ts) / 1e9
+      val (v1, probeS) = probed()
       val filesBefore = parquetFileCount(filesDir)
       var compactS = 0.0
       if (filesBefore > fileTrigger) {
-        val tc = System.nanoTime()
-        compact()
-        compactS = (System.nanoTime() - tc) / 1e9
+        compactS = Harness.measure(spark)(compact()).seconds
         compactions += 1
-        val v2 = probed()
+        val (v2, _) = probed()
         require(v1 == v2,
           s"batch $b: $name probe results changed across compaction " +
             s"(${v1.size} vs ${v2.size} rows)")
       }
-      val ta = System.nanoTime()
-      mutate(batch)
-      val mutateS = (System.nanoTime() - ta) / 1e9
+      val mutateS = Harness.measure(spark)(mutate(batch)).seconds
       walls(b) = probeS + mutateS
       println(f"soak batch $b%2d: arrivals=${batch.count()}%4d " +
         f"$probeLabel=$probeS%6.2f $mutateLabel=$mutateS%5.2f " +
@@ -1249,37 +829,28 @@ object ScaleTest {
     require(late <= 2.5 * early,
       f"per-batch wall is NOT flat: late median $late%.2f vs early $early%.2f")
     graft.Fs.deleteRec(java.nio.file.Paths.get(base))
-    spark.stop()
   }
 
   /** Distributed evolving decontam gate soak: screen→append per batch.
     * Trigger 192 at ~22 files per append (the batch vocab spans ~22 of
     * the 64 buckets) fires every ~6 batches after a reset. */
-  private def soakMain(nBatches: Int): Unit = {
-    import org.apache.spark.sql.functions._
-    val spark = soakSession()
-    import graft.llm.Retrieval
-    val src = "/root/testdata/sf0.1"
-    val docs = Tables.documents(spark, src).select("doc_id", "text")
+  private def soakMain(spark: SparkSession, nBatches: Int): Unit = {
+    val docs = Tables.documents(spark, Src).select("doc_id", "text")
       .localCheckpoint()
     val seed = docs.filter(col("doc_id") % 3 === 0)
     val arrivals = docs.filter(col("doc_id") % 3 =!= 0)
     val base = java.nio.file.Files
       .createTempDirectory("graft_soak_evodist").toString
-    val inc = new Retrieval.EvolvingDistIndex(spark, base)
-    val t0 = System.nanoTime()
-    inc.append(seed)
-    println(f"soak seed: ${seed.count()} docs, " +
-      f"${(System.nanoTime() - t0) / 1e9}%.2f s")
-    graft.plans.TopKPerKey.ensureRegistered(spark)
-    // Interleaved DELETE leg (round 15): each batch appends its arrivals
-    // then deletes a deterministic ~1/8 slice of the PREVIOUS batch's
-    // (appended, never re-deleted — batches are disjoint), so every later
-    // screen runs the tombstone-anti-join + negative-delta regime and
-    // every file-pressure compaction fires with live tombstones; the
-    // runSoak screen-identity require then covers masked vs
-    // physically-drained at each firing.
-    var prevBatch: org.apache.spark.sql.DataFrame = null
+    val inc = new graft.llm.Retrieval.EvolvingDistIndex(spark, base)
+    val seedS = Harness.measure(spark)(inc.append(seed)).seconds
+    println(f"soak seed: ${seed.count()} docs, $seedS%.2f s")
+    // Interleaved DELETE leg: each batch appends its arrivals then deletes
+    // a deterministic ~1/8 slice of the PREVIOUS batch's (appended, never
+    // re-deleted — batches are disjoint), so every later screen runs the
+    // tombstone-anti-join + negative-delta regime and every file-pressure
+    // compaction fires with live tombstones; the runSoak screen-identity
+    // require then covers masked vs physically-drained at each firing.
+    var prevBatch: DataFrame = null
     runSoak(spark, nBatches, "evodist", base, s"$base/postings", 192L,
       "screen", "append+del",
       b => arrivals
@@ -1299,19 +870,15 @@ object ScaleTest {
   /** Standing shingle index soak: probe→commit-survivors per batch,
     * shingleCompact under marker-suspend. 64 new files per commit
     * (shingle vocab spans all buckets) → trigger 192 fires every ~3. */
-  private def soakDedupMain(nBatches: Int): Unit = {
-    import org.apache.spark.sql.functions._
-    val spark = soakSession()
+  private def soakDedupMain(spark: SparkSession, nBatches: Int): Unit = {
     import graft.llm.Dedup
-    val src = "/root/testdata/sf0.1"
     val base = java.nio.file.Files
       .createTempDirectory("graft_soak_shingle").toString
-    val t0 = System.nanoTime()
-    Dedup.shingleBuildIfStale(spark, src, base)
-    println(f"soak dedup build: ${(System.nanoTime() - t0) / 1e9}%.2f s")
+    val buildS = Harness.measure(spark)(Dedup.shingleBuildIfStale(spark, Src, base)).seconds
+    println(f"soak dedup build: $buildS%.2f s")
     // The build's standing corpus is doc_id % 5 =!= 0; arrivals come from
     // the held-out fifth, split into nBatches by id hash.
-    val pool = Tables.documents(spark, src)
+    val pool = Tables.documents(spark, Src)
       .filter(col("doc_id") % 5 === 0).select("doc_id", "text")
       .localCheckpoint()
     // Commit needs the batch's SURVIVORS — derived from the rows of the
@@ -1319,16 +886,16 @@ object ScaleTest {
     // When a compaction intervenes the memo holds the post-compaction
     // probe's rows, which the identity require has already proven equal.
     var lastProbe: Array[org.apache.spark.sql.Row] = Array.empty
-    // Interleaved DELETE leg (round 15): each batch tombstones a
-    // deterministic ~1/4 slice of the PREVIOUS batch's committed
-    // survivors — steady commit+delete traffic, so compactions fire
-    // with live tombstones and runSoak's probe-identity require covers
-    // the tombstone-anti-join vs physically-dropped regimes. Survivors
-    // are the one population the delete contract admits: committed
-    // (live postings exist), never re-deleted (batches are disjoint),
-    // and this corpus sits far under the df cap (max df 21 vs 50), so
-    // the cap-resurrection guard cannot fire.
-    var prevSurvivors: org.apache.spark.sql.DataFrame = null
+    // Interleaved DELETE leg: each batch tombstones a deterministic ~1/4
+    // slice of the PREVIOUS batch's committed survivors — steady
+    // commit+delete traffic, so compactions fire with live tombstones and
+    // runSoak's probe-identity require covers the tombstone-anti-join vs
+    // physically-dropped regimes. Survivors are the one population the
+    // delete contract admits: committed (live postings exist), never
+    // re-deleted (batches are disjoint), and this corpus sits far under
+    // the df cap (max df 21 vs 50), so the cap-resurrection guard cannot
+    // fire.
+    var prevSurvivors: DataFrame = null
     runSoak(spark, nBatches, "dedup", base, s"$base/postings", 192L,
       "probe", "commit+del",
       b => pool
@@ -1355,24 +922,22 @@ object ScaleTest {
     * AnnIndex.compact under marker-suspend. ~24 files per append (~√N
     * cells at this corpus, most touched per batch) → trigger 192 fires
     * every ~7 batches after a reset. */
-  private def soakAnnMain(nBatches: Int): Unit = {
-    import org.apache.spark.sql.functions._
-    val spark = soakSession()
+  private def soakAnnMain(spark: SparkSession, nBatches: Int): Unit = {
     import graft.llm.{AnnIndex, StandingIndex}
-    val src = "/root/testdata/sf0.1"
-    val emb = Tables.embeddings(spark, src).select("vec_id", "embedding")
+    val emb = Tables.embeddings(spark, Src).select("vec_id", "embedding")
       .localCheckpoint()
     val seed = emb.filter(col("vec_id") % 3 === 0)
     val pool = emb.filter(col("vec_id") % 3 =!= 0)
     val base = java.nio.file.Files
       .createTempDirectory("graft_soak_ann").toString
-    val t0 = System.nanoTime()
-    val n = AnnIndex.buildFrom(spark, seed, base)
-    // The probe budget rides the marker's ` n=` tail (buildIfStale's
-    // protocol); the soak builds from a seed frame, so it stamps its own.
-    StandingIndex.commit(base, s"dir=soak sig=seed n=$n")
-    println(f"soak ann build: $n vectors, " +
-      f"${(System.nanoTime() - t0) / 1e9}%.2f s")
+    var n = 0L
+    val buildS = Harness.measure(spark) {
+      n = AnnIndex.buildFrom(spark, seed, base)
+      // The probe budget rides the marker's ` n=` tail (buildIfStale's
+      // protocol); the soak builds from a seed frame, so it stamps its own.
+      StandingIndex.commit(base, s"dir=soak sig=seed n=$n")
+    }.seconds
+    println(f"soak ann build: $n vectors, $buildS%.2f s")
     runSoak(spark, nBatches, "ann", base, s"$base/cells", 192L,
       "probe", "append",
       b => pool

@@ -80,9 +80,11 @@ object CosineSelfRule extends Rule[LogicalPlan] {
     }
 }
 
-/** Session extensions: SQL-registered float_cosine + the self-cosine
-  * optimization. Install with
-  * `SparkSession.builder().withExtensions(new GraftExtensions)`. */
+/** Session extensions: SQL-registered float_cosine, the self-cosine
+  * optimization, and the planner strategies of the custom operators
+  * (graft.plans.TopKPerKey, graft.plans.LastBefore). Installed by
+  * [[graft.Harness.session]]; bound at session build, so a streaming
+  * query's session clone inherits them. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {
     e.injectFunction((
@@ -90,5 +92,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       new ExpressionInfo(classOf[FloatCosine].getName, "float_cosine"),
       (children: Seq[Expression]) => FloatCosine(children(0), children(1))))
     e.injectOptimizerRule(_ => CosineSelfRule)
+    e.injectPlannerStrategy(_ => graft.plans.TopKStrategy)
+    e.injectPlannerStrategy(_ => graft.plans.LastBeforeStrategy)
   }
 }

@@ -351,7 +351,8 @@ object Dedup {
     * not fit and the doc-arity joins fall back to shuffle joins, which at
     * that scale are the right plan anyway. Measured at 100×: the
     * containment verify term (two sort-merge joins + filter + sort of the
-    * pair frame) fell from +15.6 s to under the noise floor (Decompose). */
+    * pair frame) fell from +15.6 s to under the noise floor (prefix
+    * decomposition). */
   val SizesBroadcastMaxDocBytes: Long = 256L << 20
 
   /** The documents table's on-disk parquet bytes — a zero-job gate input
@@ -416,16 +417,7 @@ object Dedup {
     * batch-side × corpus-side join, so cost is |batch| × overlap, not
     * |corpus|². Every batch doc is reported: is_dup + its smallest matching
     * corpus doc (−1 when none), jaccard >= [[JaccardThreshold]]. */
-  def incrementalDedup(s: SparkSession, d: String): DataFrame =
-    incrementalDedupStages(s, d).last._2
-
-  /** [[incrementalDedup]] with its pipeline prefixes exposed by name, so
-    * [[graft.Decompose]] can attribute deep-scale wall time to a specific
-    * term (index build vs candidate-pair aggregate vs verification) instead
-    * of guessing — the 100×-ladder rule is decomposition before fix. The
-    * LAST stage is the query; earlier stages are its own intermediates. */
-  private[graft] def incrementalDedupStages(
-      s: SparkSession, d: String): Seq[(String, DataFrame)] = {
+  def incrementalDedup(s: SparkSession, d: String): DataFrame = {
     val sh = graft.TrackedCaches.track(cappedShingles(s, d).cache())
     val sizes = maybeBroadcastSizes(s, d,
       sh.groupBy("doc_id").agg(count(lit(1)).as("n")))
@@ -440,14 +432,12 @@ object Dedup {
       .filter(col("i").cast(DoubleType) /
         (col("na.n") + col("nb.n") - col("i")) >= JaccardThreshold)
       .groupBy(col("da")).agg(min(col("db")).as("dup_src"))
-    val full = Tables.documents(s, d).filter(col("doc_id") % 5 === 0)
+    Tables.documents(s, d).filter(col("doc_id") % 5 === 0)
       .select(col("doc_id"))
       .join(matches, col("doc_id") === col("da"), "left")
       .select(col("doc_id"), col("dup_src").isNotNull.as("is_dup"),
         coalesce(col("dup_src"), lit(-1L)).as("dup_of"))
       .orderBy("doc_id")
-    Seq("capped_index" -> sh, "pair_agg" -> inter,
-      "verify_matches" -> matches, "full" -> full)
   }
 
   val incrementalDedupSql: String =
@@ -1165,29 +1155,6 @@ object Dedup {
     * corpus's ~100-word docs carry a meaningful number of windows. */
   val DupN = 13
 
-  /** The [[DupN]]-word window strings of a tokenized doc (`ws` column) as
-    * a SQL expression — UNROLLED element accesses joined by concat_ws,
-    * not `array_join(slice(ws, i + 1, DupN))`: the slice materializes a
-    * 13-element collection per window position, and at the 30x ladder
-    * that Scala-collection machinery (IndexedSeqOps.slice / toArray /
-    * Vector copies inside the interpreted higher-order lambda) was the
-    * single hottest frame family of the window queries — ~2x their
-    * corpus-side cost. concat_ws over direct ArrayData accesses emits
-    * the IDENTICAL string (both join with ' '; split() never yields null
-    * elements), so the md5s and every downstream result are unchanged
-    * and the DuckDB oracle keeps its array_to_string(slice) form. */
-  // Retained as the spec-pinned reference formulation for
-  // [[graft.functions.WordWindows]] (the ZExprFold precedent): the fused
-  // codegen kernel below must stay window-for-window identical to this
-  // HOF — TextFunctionsSpec proves it on the live corpus.
-  private[graft] def dupWindowsExpr: String = {
-    val parts = (0 until DupN).map(k => s"ws[i + $k]").mkString(", ")
-    s"""CASE WHEN size(ws) >= $DupN
-        THEN transform(sequence(0, size(ws) - $DupN),
-                       i -> concat_ws(' ', $parts))
-        ELSE array() END"""
-  }
-
   /** Corpus-duplicated text fraction per document — the "how much of this
     * doc exists elsewhere" QUALITY signal that complements the pairwise
     * dedup family: for every [[DupN]]-word window (every position, not
@@ -1210,13 +1177,7 @@ object Dedup {
     * at the 100× ladder that occurrence-scale join was the query's
     * dominant term (+9.3 s of 20.8 — SCALING.md). This is [[ngramNovelty]]'s
     * owner-re-aggregation move applied to the occurrence-counted stream. */
-  def dupNgramFraction(s: SparkSession, d: String): DataFrame =
-    dupNgramFractionStages(s, d).last._2
-
-  /** [[dupNgramFraction]] pipeline prefixes for [[graft.Decompose]] (same
-    * convention as [[incrementalDedupStages]]: last stage is the query). */
-  private[graft] def dupNgramFractionStages(
-      s: SparkSession, d: String): Seq[(String, DataFrame)] = {
+  def dupNgramFraction(s: SparkSession, d: String): DataFrame = {
     val w = Tables.documents(s, d)
       .select(col("doc_id"), split(col("text"), " ").as("ws"))
     val g = w.select(col("doc_id"),
@@ -1234,11 +1195,11 @@ object Dedup {
     // its occurrences to exactly one document.
     val uniq = hagg.filter(col("df") === 1)
       .groupBy(col("d0").as("doc_id")).agg(sum("occ").as("n_uniq"))
-    val full = w.select(col("doc_id"),
+    w.select(col("doc_id"),
         greatest(size(col("ws")) - (DupN - 1), lit(0))
           .cast(LongType).as("n_grams"))
       .join(uniq, Seq("doc_id"), "left")
-      // n_dup = n_grams − n_uniq: dupWindowsExpr emits one window per
+      // n_dup = n_grams − n_uniq: wordWindows emits one window per
       // position (no cap, no distinct), so per-doc occurrences sum to
       // n_grams exactly and the complement is exact integer arithmetic.
       .select(col("doc_id"), col("n_grams"),
@@ -1248,8 +1209,6 @@ object Dedup {
           round(col("n_dup").cast(DoubleType) / col("n_grams"), 4))
           .otherwise(lit(0.0)).as("dup_frac"))
       .orderBy("doc_id")
-    Seq("window_stream" -> g, "hash_rollup" -> hagg,
-      "uniq_owner" -> uniq, "full" -> full)
   }
 
   val dupNgramFractionSql: String =
@@ -1722,26 +1681,6 @@ object Dedup {
       graft.TrackedCaches.track(cappedShingles(s, d).cache()),
       broadcastSizes = sizesBroadcastOn(s) &&
         docBytes(s, d) <= SizesBroadcastMaxDocBytes)
-
-  /** [[containmentPairs]] pipeline prefixes for [[graft.Decompose]] (same
-    * convention as [[incrementalDedupStages]]: last stage is the query).
-    * The full stage passes the SAME sizes-broadcast gate decision
-    * production [[containmentPairs]] makes — a decomposition that timed a
-    * different verification-join plan than the ladder runs would attribute
-    * the wrong term. */
-  private[graft] def containmentPairsStages(
-      s: SparkSession, d: String): Seq[(String, DataFrame)] = {
-    val sh = graft.TrackedCaches.track(cappedShingles(s, d).cache())
-    val a = sh.as("a"); val b = sh.as("b")
-    val inter = a.join(b,
-        col("a.sh") === col("b.sh") && col("a.doc_id") < col("b.doc_id"), "inner")
-      .groupBy(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-      .agg(count(lit(1)).as("i"))
-    Seq("capped_index" -> sh, "pair_agg" -> inter,
-      "full" -> containmentPairsOf(sh,
-        broadcastSizes = sizesBroadcastOn(s) &&
-          docBytes(s, d) <= SizesBroadcastMaxDocBytes))
-  }
 
   /** [[containmentPairs]] over an explicit df-capped shingle frame
     * (doc_id, sh) — exposed so DedupSpec can prove the asymmetric case on a

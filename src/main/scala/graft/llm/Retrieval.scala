@@ -99,34 +99,19 @@ object Retrieval {
     * formulation is posting-for-posting identical to the string-round
     * one there). */
   /** The ONE definition of the per-posting BM25 term-score product ts —
-    * idf(df) * tf*(k1+1) / (tf + k1*(1-b + b*len/avglen)) — shared by all
-    * three builders below. Their whole contract (and RetrievalSpec's
-    * floor-vs-round and boundary-distance pins) is that every formulation
-    * evaluates the IDENTICAL Column expression tree; deriving them from
-    * one builder makes token-identity structural instead of a discipline. */
-  private def tsProduct(n: Long, avgLen: Double): Column =
+    * idf(df) * tf*(k1+1) / (tf + k1*(1-b + b*len/avglen)) — shared by
+    * [[impMicros]] and RetrievalSpec's string-round and boundary-distance
+    * reference formulations. Their whole contract is that every
+    * formulation evaluates the IDENTICAL Column expression tree; deriving
+    * them from one function makes token-identity structural instead of a
+    * discipline. */
+  private[graft] def tsProduct(n: Long, avgLen: Double): Column =
     log(lit(1.0) + (lit(n) - col("df") + lit(0.5)) / (col("df") + lit(0.5))) *
       (col("tf") * lit(K1 + 1.0)) /
       (col("tf") + lit(K1) * (lit(1.0 - B) + lit(B) * (col("len") / lit(avgLen))))
 
   private[graft] def impMicros(n: Long, avgLen: Double): Column =
     floor(tsProduct(n, avgLen) * lit(1000000.0) + lit(0.5)).cast(LongType)
-
-  /** The round-10 string-round formulation of [[impMicros]], kept ONLY as
-    * RetrievalSpec's cross-formulation oracle (posting-for-posting equality
-    * on the live corpus each round). */
-  private[graft] def impMicrosViaStringRound(n: Long, avgLen: Double): Column =
-    (round(tsProduct(n, avgLen), 6) * lit(1000000.0) + lit(0.5)).cast(LongType)
-
-  /** Distance of every posting's shifted micro-unit product
-    * (ts * 1e6 + 0.5) from the nearest INTEGER — where floor() flips —
-    * RetrievalSpec's empirical boundary-safety pin (the corpus minimum
-    * must clear any plausible cross-engine ulp difference by orders of
-    * magnitude). */
-  private[graft] def impBoundaryDist(n: Long, avgLen: Double): Column = {
-    val prod = tsProduct(n, avgLen) * lit(1000000.0) + lit(0.5)
-    least(prod - floor(prod), floor(prod) + lit(1.0) - prod)
-  }
 
   private[graft] def buildIndex(docs: DataFrame, cache: Boolean = false): Bm25Index = {
     val tf0 = postings(docs)
@@ -2081,7 +2066,6 @@ object Retrieval {
     // untouched — the live-docs serving semantics.
     val ix = Bm25Index(liveBm25Postings(s, base, pruned("postings")),
       pruned("dft"), nS.toLong, java.lang.Double.parseDouble(alS))
-    graft.plans.TopKPerKey.ensureRegistered(s)
     val scores = candidates(ix, qt)
       .groupBy("query_id", "doc_id").agg(sum("imp").as("smicro"))
     val top = graft.plans.TopKPerKey.topKPerKey(scores, k, Seq("query_id"),

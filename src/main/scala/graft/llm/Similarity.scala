@@ -683,25 +683,15 @@ object Similarity {
     * (vec_id, embedding). At 100 TB this runs at read bandwidth and is the
     * standard pre-step that cuts IVF/LSH index memory 4× (RecallSpec
     * measures the cosine distortion the 4× buys). */
-  def randProjection(s: SparkSession, d: String): DataFrame =
-    randProjectionStages(s, d).last._2
-
-  /** [[randProjection]] pipeline prefixes for [[graft.Decompose]] (same
-    * convention as the dedup `*Stages`: last stage is the query). */
-  private[graft] def randProjectionStages(
-      s: SparkSession, d: String): Seq[(String, DataFrame)] = {
+  def randProjection(s: SparkSession, d: String): DataFrame = {
     val comps = (0 until RpDims).map { j =>
       graft.functions.VectorFunctions.longDot(
         col("sarr"), typedLit((1 to 64).map(i => rpSign(j, i))))
     }
-    val sx = scaledEmb(s, d)
-    val dots = sx.select(col("vec_id") +: comps.zipWithIndex.map {
-      case (c, j) => c.as(s"r$j") }: _*)
-    val full = sx
+    scaledEmb(s, d)
       .select(col("vec_id"),
         array_join(array(comps.map(_.cast(StringType)): _*), ",").as("rp_csv"))
       .orderBy("vec_id")
-    Seq("scaled" -> sx, "dots" -> dots, "full" -> full)
   }
 
   val randProjectionSql: String =

@@ -694,8 +694,9 @@ object TextAnalysis {
     * Determinism across engines: each bigram's log-prob is rounded to 6
     * decimals (ln is libm-dependent in the last ulp — same discipline as
     * [[tfidfTop]]), then summed as DECIMAL(20,6) so the per-doc sum is exact
-    * and addition-order-free; the final avg/perplexity round once more after
-    * the single double division/exp. */
+    * and addition-order-free; the average is that exact sum over the bigram
+    * count rounded half away from zero at the sixth decimal ([[pplOf]]),
+    * and the perplexity rounds once more after the single exp. */
   def lmPerplexity(s: SparkSession, d: String): DataFrame = {
     val bigrams = bigramsOf(Tables.documents(s, d).select("doc_id", "text"))
     val (c2, c1, vocab) = bigramModel(bigrams)
@@ -751,17 +752,37 @@ object TextAnalysis {
 
   /** The scoring arithmetic both model-join strategies share. */
   private def pplAgg(joined: DataFrame, vocab: Long): DataFrame =
-    joined
+    pplOf(joined
       .withColumn("logp", round(log(
         (coalesce(col("c2"), lit(0L)) + lit(LmAlpha)) /
           (coalesce(col("c1"), lit(0L)) + lit(LmAlpha * vocab))), 6))
       .groupBy("doc_id")
       .agg(count(lit(1)).cast(IntegerType).as("n_bigrams"),
-        sum(col("logp").cast(DecimalType(20, 6))).as("slp"))
-      .select(col("doc_id"), col("n_bigrams"),
-        round(col("slp").cast(DoubleType) / col("n_bigrams"), 6).as("avg_logprob"),
-        round(exp(-round(col("slp").cast(DoubleType) / col("n_bigrams"), 6)), 6)
-          .as("ppl"))
+        sum(col("logp").cast(DecimalType(20, 6))).as("slp")))
+
+  /** (doc_id, n_bigrams, slp) -> (doc_id, n_bigrams, avg_logprob, ppl).
+    * avg_logprob is slp / n_bigrams rounded half away from zero at the
+    * sixth decimal, computed EXACTLY: slp is a DECIMAL(20,6) sum, so
+    * slp * 1e6 is an exact long m and round(m / n) = sign(m) *
+    * floor((2|m| + n) / 2n) in integer arithmetic. A double quotient
+    * cannot do this at a true tie: -156.436161 / 42 = -3.7246705 exactly,
+    * but the double is -3.72467049999..., which Spark rounded to -3.72467
+    * and DuckDB to -3.724671. [[AvgLogprobSql]] is the same integer
+    * arithmetic on the oracle side. */
+  private[graft] def pplOf(agg: DataFrame): DataFrame = {
+    val q = expr("(2 * abs(m) + n_bigrams) div (2 * n_bigrams)")
+    val avg = when(col("m") < 0, -q).otherwise(q).cast(DoubleType) / lit(1000000.0)
+    agg.withColumn("m", (col("slp") * lit(1000000)).cast(LongType))
+      .select(col("doc_id"), col("n_bigrams"), avg.as("avg_logprob"),
+        round(exp(-avg), 6).as("ppl"))
+  }
+
+  /** DuckDB twin of [[pplOf]]'s avg_logprob over columns slp and
+    * n_bigrams (`//` is DuckDB's integer division). */
+  private[graft] val AvgLogprobSql: String = {
+    val m = "CAST(slp * 1000000 AS BIGINT)"
+    s"(CAST(sign($m) * ((2 * abs($m) + n_bigrams) // (2 * n_bigrams)) AS DOUBLE) / 1000000)"
+  }
 
   /** [[lmPerplexity]] through the open-vocabulary scoring path — bit-equal
     * results (same counts, same rounding discipline), different physical
@@ -786,9 +807,8 @@ object TextAnalysis {
         agg AS (SELECT doc_id, CAST(count(*) AS INT) AS n_bigrams,
                   sum(CAST(logp AS DECIMAL(20, 6))) AS slp
                 FROM lp GROUP BY 1)
-        SELECT doc_id, n_bigrams,
-          round(CAST(slp AS DOUBLE) / n_bigrams, 6) AS avg_logprob,
-          round(exp(-round(CAST(slp AS DOUBLE) / n_bigrams, 6)), 6) AS ppl
+        SELECT doc_id, n_bigrams, $AvgLogprobSql AS avg_logprob,
+          round(exp(-$AvgLogprobSql), 6) AS ppl
         FROM agg ORDER BY doc_id"""
 
   /** CCNet-style perplexity bucketing: split each language's documents into

@@ -22,23 +22,15 @@ object Layout {
   /** Epoch hour of 2024-01-01T00:00Z, the corpus's first event hour. */
   private val HourZero = 1704067200L / 3600L
 
-  /** The original z-value formulation: a 16-round higher-order fold over
-    * the bit positions. Kept (unused by the query path) as the reference
-    * the closed form below is spec-pinned against (LayoutSpec), exactly
-    * like the retrieval family keeps its replaced formulations. */
-  private[graft] val ZExprFold =
-    """aggregate(sequence(0, 15), cast(0 as bigint), (acc, i) ->
-         acc + shiftleft(shiftright(user_id, i) & 1, 2 * i)
-             + shiftleft(shiftright(hour_idx, i) & 1, 2 * i + 1))"""
-
   /** Morton spread of a column's low 16 bits into the even bit positions —
     * the branchless shift-or-mask ladder (public-domain "Bit Twiddling
     * Hacks" interleave), all builtin codegen bitwise ops. The round-16
-    * sampling profile showed the fold formulation above evaluated
-    * INTERPRETED per row (ArrayAggregate.eval + per-step
-    * BinaryArithmetic.eval frames — higher-order functions do not
-    * participate in whole-stage codegen), 16 rounds x ~6 interpreted node
-    * evals per event; this closed form is 8 codegen ops total. */
+    * sampling profile showed the 16-round higher-order fold formulation
+    * (LayoutSpec keeps it as the reference) evaluated INTERPRETED per row
+    * (ArrayAggregate.eval + per-step BinaryArithmetic.eval frames —
+    * higher-order functions do not participate in whole-stage codegen),
+    * 16 rounds x ~6 interpreted node evals per event; this closed form is
+    * 8 codegen ops total. */
   private def spread16(c: Column): Column = {
     val m0 = c.bitwiseAND(lit(0xFFFFL))
     val m1 = m0.bitwiseOR(shiftleft(m0, 8)).bitwiseAND(lit(0x00FF00FFL))
@@ -48,10 +40,10 @@ object Layout {
   }
 
   /** Bit-interleave of the low 16 bits of user_id and hour_idx. Bit-
-    * identical to [[ZExprFold]]: the fold SUMS terms that live in disjoint
-    * bit positions (user bits at even, hour bits at odd), so the sum IS
-    * the OR of the two spreads — LayoutSpec asserts equality row-for-row
-    * on the live events table. */
+    * identical to the fold formulation: the fold SUMS terms that live in
+    * disjoint bit positions (user bits at even, hour bits at odd), so the
+    * sum IS the OR of the two spreads — LayoutSpec asserts equality
+    * row-for-row on the live events table. */
   private def zValue: Column =
     spread16(col("user_id"))
       .bitwiseOR(shiftleft(spread16(col("hour_idx")), 1))

@@ -112,10 +112,6 @@ object LastBefore {
   def lastBefore(df: DataFrame, keyNames: Seq[String], orderNames: Seq[String],
       condCol: String, valueCol: String, outName: String): DataFrame = {
     val spark = df.sparkSession
-    if (!spark.experimental.extraStrategies.contains(LastBeforeStrategy)) {
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ LastBeforeStrategy
-    }
     val child = df.queryExecution.analyzed
     def attr(n: String): Attribute = child.output
       .find(_.name.equalsIgnoreCase(n))

@@ -24,7 +24,8 @@ import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy, UnaryExecNode}
   * the full table — the difference between shuffling 100 TB and shuffling
   * k * |keys| rows. Demonstrates the full custom-operator surface:
   * LogicalPlan node + Strategy + physical SparkPlans, registered through
-  * SparkSessionExtensions (graft.functions.GraftExtensions).
+  * SparkSessionExtensions (graft.functions.GraftExtensions) — a session
+  * built without them has no plan for the node.
   */
 case class TopKPerKey(
     k: Int,
@@ -122,24 +123,9 @@ object TopKPerKey {
     * from the analyzed child directly: pure catalyst expressions, fully
     * task-serializable (Column->Expression conversion of `.desc` columns
     * drags a non-serializable sql.internal.SortOrder node into tasks). */
-  /** Register the strategy on `spark` if absent. Callers that plan on a
-    * DIFFERENT session than the frames' own must pre-register there: a
-    * streaming query clones the session at start() and plans every
-    * micro-batch on the clone, so a foreachBatch that builds a TopKPerKey
-    * node would otherwise die with "No plan for TopKPerKey" — register on
-    * the parent session BEFORE start() and the clone inherits it. */
-  def ensureRegistered(spark: org.apache.spark.sql.SparkSession): Unit =
-    if (!spark.experimental.extraStrategies.contains(TopKStrategy)) {
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ TopKStrategy
-    }
-
   def topKPerKey(df: DataFrame, k: Int, keyNames: Seq[String],
       orderSpecs: Seq[(String, Boolean)]): DataFrame = {
     val spark = df.sparkSession
-    // Make the strategy available on ANY session (the driver contract runs
-    // queries on sessions we don't build, so withExtensions isn't enough).
-    ensureRegistered(spark)
     val child = df.queryExecution.analyzed
     def attr(n: String): Attribute = child.output
       .find(_.name.equalsIgnoreCase(n))

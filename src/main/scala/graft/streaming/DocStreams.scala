@@ -617,11 +617,9 @@ object DocStreams {
         agg AS (SELECT doc_id, CAST(count(*) AS INT) AS n_bigrams,
                   sum(CAST(logp AS DECIMAL(20, 6))) AS slp
                 FROM lp GROUP BY 1)
-        SELECT doc_id, n_bigrams,
-          round(CAST(slp AS DOUBLE) / n_bigrams, 6) AS avg_logprob,
-          round(exp(-round(CAST(slp AS DOUBLE) / n_bigrams, 6)), 6) AS ppl,
-          (round(exp(-round(CAST(slp AS DOUBLE) / n_bigrams, 6)), 6)
-            <= $PplAdmitMax) AS admit
+        SELECT doc_id, n_bigrams, ${TextAnalysis.AvgLogprobSql} AS avg_logprob,
+          round(exp(-${TextAnalysis.AvgLogprobSql}), 6) AS ppl,
+          (round(exp(-${TextAnalysis.AvgLogprobSql}), 6) <= $PplAdmitMax) AS admit
         FROM agg ORDER BY doc_id"""
 
   /** Batch oracle: the same digest + MinHash-band arithmetic over the same
@@ -743,10 +741,6 @@ object DocStreams {
       } else {
         val ix = Retrieval.buildIndex(corpus, cache = true)
         val fwd = Retrieval.forwardIndex(ix, cache = true)
-        // The candidate cap runs the custom TopKPerKey operator INSIDE each
-        // micro-batch; the stream plans on a session clone made at start(), so
-        // the strategy must be on the parent session first (see ensureRegistered).
-        graft.plans.TopKPerKey.ensureRegistered(s)
         (batch: DataFrame) => {
           val qt = Retrieval.postings(batch.select(col("doc_id"), col("text")))
             .select(col("doc_id").as("query_id"), col("term"))
@@ -981,7 +975,6 @@ object DocStreams {
     val inc = new Retrieval.EvolvingDistIndex(s, base.toString)
     inc.append(corpus) // the one-time seed build — corpus-scale, like buildIndex
     tg = mark("seed", tg)
-    graft.plans.TopKPerKey.ensureRegistered(s)
     def verdicts(batch: DataFrame): DataFrame =
       inc.screen(batch.select(col("doc_id"), col("text")))
         .select(col("doc_id"), col("top_match"), col("top_score"),
@@ -1171,7 +1164,6 @@ object DocStreams {
         StandingIndex.commit(base.toString, want)
         ix
       }
-    graft.plans.TopKPerKey.ensureRegistered(s)
     inc.screen(docs.filter(col("doc_id") % 5 === 0))
       .select(col("doc_id"), col("top_match"), col("top_score"),
         (col("top_score") <= lit(Bm25AdmitMax)).as("admit"))

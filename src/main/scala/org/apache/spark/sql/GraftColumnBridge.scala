@@ -14,4 +14,10 @@ object GraftColumnBridge {
   def ofRows(spark: SparkSession, plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): DataFrame =
     classic.Dataset.ofRows(
       spark.asInstanceOf[classic.SparkSession], plan)
+
+  /** Waits until every queued listener event has been delivered (the bus
+    * is private[spark]), so a QueryExecutionListener has seen every
+    * execution of a finished action. */
+  def drainListeners(spark: SparkSession): Unit =
+    spark.sparkContext.listenerBus.waitUntilEmpty()
 }

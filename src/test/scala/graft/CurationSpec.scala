@@ -39,6 +39,20 @@ class CurationSpec extends SparkSpec {
     out.unpersist()
   }
 
+  test("avg_logprob rounds an exact sixth-decimal tie half away from zero") {
+    // -156.436161 / 42 = -3.7246705 exactly; its double is -3.72467049999...
+    // Expected values are DuckDB 1.0.0's for the oracle formulation.
+    import spark.implicits._
+    val rows = TextAnalysis.pplOf(
+        Seq((1L, 42, "-156.436161"), (2L, 42, "156.436161"), (3L, 3, "-10.000001"))
+          .toDF("doc_id", "n_bigrams", "slp")
+          .withColumn("slp", col("slp").cast("decimal(20,6)")))
+      .orderBy("doc_id").collect()
+      .map(r => (r.getAs[Double]("avg_logprob"), r.getAs[Double]("ppl")))
+    assert(rows.toSeq == Seq((-3.724671, 41.457591), (3.724671, 0.024121),
+      (-3.333334, 28.031644)))
+  }
+
   test("perplexity buckets partition each language with monotone mean ppl") {
     val out = TextAnalysis.pplBuckets(spark, Sf).cache()
     val perLang = out.groupBy("lang")

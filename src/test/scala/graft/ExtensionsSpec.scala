@@ -1,28 +1,31 @@
 package graft
 
-import graft.functions.{GraftExtensions, SelfCosine}
+import graft.functions.SelfCosine
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** SparkSessionExtensions: SQL function registration + optimizer rule. Own
-  * session (extensions bind at build time). */
+/** SparkSessionExtensions: SQL function registration, optimizer rule and
+  * planner strategies. Own session (extensions bind at build time). */
 class ExtensionsSpec extends AnyFunSuite {
-  // getOrCreate would silently return another suite's session (no
-  // extensions); clearing forces a fresh session (shared SparkContext is fine).
+  // getOrCreate would silently return another suite's session; clearing
+  // forces a fresh one (the shared SparkContext is fine).
   lazy val spark: SparkSession = {
     SparkSession.clearActiveSession()
     SparkSession.clearDefaultSession()
-    SparkSession.builder()
-    .master("local[2]")
-    .appName("graft-ext-test")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.local.dir", graft.ShuffleDir.path)
-      .config("spark.shuffle.sort.bypassMergeThreshold", "1")
-    .config("spark.ui.enabled", "false")
-    .withExtensions(new GraftExtensions)
-    .getOrCreate()
+    Harness.session(Map("SPARK_GRAFT_CPUS" -> "2"))
+  }
+
+  test("custom operators plan through the extensions, not extraStrategies") {
+    Seq("q_topk_per_key", "q_attribution").foreach { q =>
+      val df = SparkEntry.queries(q)(spark, "/root/testdata/sf0.001")
+      assert(df.count() > 0, s"$q returned no rows")
+    }
+    val plan = SparkEntry.queries("q_topk_per_key")(spark, "/root/testdata/sf0.001")
+      .queryExecution.executedPlan.toString
+    assert(plan.contains("TopKPerKey"), plan)
+    assert(spark.experimental.extraStrategies.isEmpty,
+      s"strategies were mutated in: ${spark.experimental.extraStrategies}")
   }
 
   test("float_cosine is callable from SQL") {

@@ -138,6 +138,16 @@ class RetrievalSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     // floor — the cross-engine-agreement argument is corpus-verified, not
     // assumed.
     import org.apache.spark.sql.functions._
+    // The round-10 string-round formulation of impMicros, and the distance
+    // of each posting's shifted product (ts * 1e6 + 0.5) from the nearest
+    // integer, where floor() flips — both over the shared tsProduct tree.
+    def impMicrosViaStringRound(n: Long, avgLen: Double) =
+      (round(Retrieval.tsProduct(n, avgLen), 6) * lit(1000000.0) + lit(0.5))
+        .cast("long")
+    def impBoundaryDist(n: Long, avgLen: Double) = {
+      val prod = Retrieval.tsProduct(n, avgLen) * lit(1000000.0) + lit(0.5)
+      least(prod - floor(prod), floor(prod) + lit(1.0) - prod)
+    }
     Seq(Sf, "/root/testdata/sf0.01").foreach { sf =>
       val docs = Tables.documents(spark, sf).select("doc_id", "text")
       val tf0 = Retrieval.postings(docs)
@@ -149,14 +159,14 @@ class RetrievalSpec extends SparkSpec with AdaptiveSparkPlanHelper {
         .join(tf0.groupBy("term").agg(count(lit(1)).as("df")), "term")
       val diverged = joined.filter(
         Retrieval.impMicros(n, avgLen) =!=
-          Retrieval.impMicrosViaStringRound(n, avgLen)).count()
+          impMicrosViaStringRound(n, avgLen)).count()
       assert(diverged == 0, s"$sf: $diverged postings diverge between " +
         "floor-based and string-round impact formulations")
       // A 1-ulp ln() difference perturbs the ~1e7-magnitude shifted
       // product by ~2e-9 per op (relative 2^-52), call it ~1e-8 through
       // the whole chain; 1e-6 demands two orders of magnitude of slack
       // (the sf0.001 corpus minimum measures ~6e-5).
-      val minDist = joined.agg(min(Retrieval.impBoundaryDist(n, avgLen)))
+      val minDist = joined.agg(min(impBoundaryDist(n, avgLen)))
         .head().getDouble(0)
       assert(minDist > 1e-6, s"$sf: a posting sits $minDist micro-units " +
         "from a floor boundary — too close to rely on cross-engine ulp slack")

@@ -43,7 +43,8 @@ class TextFunctionsSpec extends SparkSpec {
   }
 
   test("WordWindows equals the unrolled concat_ws transform — live + crafted") {
-    // The exact dupWindowsExpr formulation (DupN = 13) plus small-n edges.
+    // The unrolled concat_ws HOF the window queries ran before the fused
+    // kernel (at DupN = 13), plus small-n edges.
     Seq(2, 3, graft.llm.Dedup.DupN).foreach { n =>
       val parts = (0 until n).map(k => s"ws[i + $k]").mkString(", ")
       val hof = expr(
